@@ -1,16 +1,13 @@
 #!/usr/bin/env python
-"""Round-6 optimization measurement harness (bench.py is frozen; this
-file holds the extra instrumentation the optimization round needs:
-noop-sink isolation per guide §1.4, per-phase profiling, and
-explain("formatted") capture for plans/r06/).
+"""Measurements the benchmark (``perfbench/``) does not cover:
+explain("formatted") plan capture for plans/r06/, and the large-q IVF
+cogroup smoke.  Per-call timing lives in perfbench's traced runs
+(``python3 perfbench/run.py --workload <w> --seed N --seconds 5
+--trace 1``).
 
 Usage:
-  python bench_extra.py plans [out_suffix]   # capture plans/r06/*_{suffix}.txt
-  python bench_extra.py profile-knn [table]  # phase timing of knn_edges
-  python bench_extra.py profile-global       # job timing of moran/geary/getis
-  python bench_extra.py profile-dedup        # minhash_dedup_groups stages
-  python bench_extra.py profile-lisa         # lisa_crand / g_local phases
-  python bench_extra.py noop                 # noop-sink per-query timing
+  python bench_extra.py plans [out_suffix]        # capture plans/r06/*_{suffix}.txt
+  python bench_extra.py ivf-cogroup-smoke [n_q]   # IVF cogroup at 1M queries
 """
 
 from __future__ import annotations
@@ -22,7 +19,6 @@ import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-PERMS = int(os.environ.get("SPARK_GRAFT_BENCH_PERMS", "999"))
 
 
 def _spark():
@@ -45,162 +41,6 @@ def _fixtures(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").repartition(CPUS).cache()
     emb.count()
     return pts, big, docs, emb
-
-
-def _noop(df):
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _timed(label, fn, n=3):
-    out = []
-    for _ in range(n):
-        t0 = time.perf_counter()
-        fn()
-        out.append(round(time.perf_counter() - t0, 3))
-    print(json.dumps({"label": label, "samples": out,
-                      "median": sorted(out)[len(out) // 2]}), flush=True)
-
-
-def profile_knn(table: str) -> None:
-    from esda_spark.operators import weights as W
-    from esda_spark.sources.points import points_from_table
-
-    spark = _spark()
-    pts = points_from_table(spark, SF_DIR, table).repartition(CPUS).cache()
-    pts.count()
-    k = 8
-    sc = spark.sparkContext
-    for rep in range(3):
-        pids0 = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-        t0 = time.perf_counter()
-        base = pts.select("id", "x", "y")
-        cell = W._estimate_cell_size(pts, k)
-        t1 = time.perf_counter()
-        levels = W._density_levels(base, base, cell, max(4 * k, 32), 12)
-        t2 = time.perf_counter()
-        edges = W._knn_rounds_multi(levels, base, k, cell, True, 12, pids0)
-        n = edges.count()
-        t3 = time.perf_counter()
-        print(json.dumps({
-            "rep": rep, "estimate_s": round(t1 - t0, 3),
-            "levels_s": round(t2 - t1, 3), "n_levels": len(levels),
-            "rounds_s": round(t3 - t2, 3), "edges": n,
-            "total_s": round(t3 - t0, 3),
-        }), flush=True)
-        jmap = sc._jsc.getPersistentRDDs()
-        for rid in set(jmap.keySet().toArray()) - pids0:
-            jr = jmap.get(rid)
-            if jr is not None:
-                jr.unpersist()
-
-
-def profile_global() -> None:
-    from esda_spark.operators.global_stats import geary, getis_g, moran
-    from esda_spark.operators.weights import knn_edges
-
-    spark = _spark()
-    pts, big, docs, emb = _fixtures(spark)
-    edges = knn_edges(pts, k=8).cache()
-    edges.count()
-    moran(pts, edges, "y_cont", "r")  # warm
-    _timed("moran_global", lambda: moran(pts, edges, "y_cont", "r"))
-    _timed("geary_global", lambda: geary(pts, edges, "y_cont", "r"))
-    _timed("getis_g_global", lambda: getis_g(pts, edges, "y_cont"))
-
-
-def profile_lisa() -> None:
-    from pyspark.sql import functions as F
-
-    from esda_spark.operators.local_stats import g_local, moran_local
-    from esda_spark.operators.weights import knn_edges
-
-    spark = _spark()
-    pts, big, docs, emb = _fixtures(spark)
-    edges = knn_edges(pts, k=8).cache()
-    edges.count()
-    moran_local(pts, edges, "y_cont", permutations=19, seed=1).agg(
-        F.sum("p_sim")).collect()  # warm
-    _timed("lisa_crand", lambda: moran_local(
-        pts, edges, "y_cont", permutations=PERMS, seed=12345
-    ).select(F.sum("p_sim")).collect())
-    _timed("g_local_crand", lambda: g_local(
-        pts, edges, "y_cont", star=True, transform="R",
-        permutations=PERMS, seed=12345,
-    ).select(F.sum("p_sim")).collect())
-
-
-def profile_dedup() -> None:
-    from pyspark.sql import functions as F
-
-    from esda_spark.operators.components import connected_components
-    from esda_spark.operators.text import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-        ngram_jaccard_pairs,
-    )
-
-    spark = _spark()
-    pts, big, docs, emb = _fixtures(spark)
-    minhash_signatures(docs.limit(500), num_hashes=16).count()  # warm
-    _timed("sig16", lambda: minhash_signatures(docs, num_hashes=16).count())
-    sig = minhash_signatures(docs, num_hashes=16).cache()
-    sig.count()
-    _timed("lsh_pairs16", lambda: lsh_candidate_pairs(sig, 16, 4).count())
-    cand = lsh_candidate_pairs(sig, 16, 4).cache()
-    cand.count()
-    _timed("jaccard_verify", lambda: ngram_jaccard_pairs(docs, cand)
-           .where(F.col("jaccard") >= 0.8).count())
-    ver = ngram_jaccard_pairs(docs, cand).where(
-        F.col("jaccard") >= 0.8).cache()
-    ver.count()
-    _timed("components", lambda: connected_components(
-        ver, src="doc_a", dst="doc_b").count())
-
-
-def profile_pip() -> None:
-    from esda_spark.operators.spatial_join import point_in_polygon
-    from esda_spark.sources.polygons import rotated_tiling
-
-    spark = _spark()
-    pts, big, docs, emb = _fixtures(spark)
-    polys = rotated_tiling(spark, 24, (-180.0, -90.0, 180.0, 90.0), theta=0.3)
-    point_in_polygon(big.limit(10000), polys, 25.0).count()  # warm
-    _timed("pip_join_orders", lambda: point_in_polygon(big, polys, 25.0).count())
-
-
-def profile_ann() -> None:
-    from pyspark.sql import functions as F
-
-    from esda_spark.operators.similarity import (
-        cosine_topk, lsh_topk, near_dup_groups,
-    )
-    from esda_spark.sources.embeddings import synthetic_embeddings
-
-    spark = _spark()
-    pts, big, docs, emb = _fixtures(spark)
-    q = emb.where(F.col("vec_id") < 100).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    dim = len(emb.select("embedding").first()[0])
-    cosine_topk(emb, q, k=10).count()  # warm
-    _timed("ann_cosine_topk", lambda: cosine_topk(emb, q, k=10).count())
-    _timed("embedding_dedup_groups", lambda: near_dup_groups(
-        emb, threshold=0.9, mode="lsh")
-        .where(F.col("is_canonical") == 0).count())
-    _timed("ann_lsh_topk", lambda: lsh_topk(
-        emb, q, dim=dim, k=10, num_planes=6, num_tables=8).count())
-    cemb = synthetic_embeddings(
-        spark, 20_000, dim=64, clusters=200, noise=0.35
-    ).repartition(CPUS).cache()
-    cemb.count()
-    cq = cemb.where(F.col("vec_id") < 100).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    _timed("ann_lsh_topk_clustered", lambda: lsh_topk(
-        cemb, cq, dim=64, k=10, num_planes=10, num_tables=8).count())
-    from esda_spark.operators.similarity import ivf_topk, kmeans_fit
-
-    centers = kmeans_fit(cemb, k=64, max_iters=8, seed=7)
-    _timed("ann_ivf_topk_clustered", lambda: ivf_topk(
-        cemb, cq, centers, k=10, nprobe=4).count())
 
 
 def ivf_cogroup_smoke(n_queries: int = 1_000_000,
@@ -335,27 +175,16 @@ def capture_plans(suffix: str) -> None:
 
 
 def main() -> None:
-    cmd = sys.argv[1] if len(sys.argv) > 1 else "noop"
+    cmd = sys.argv[1] if len(sys.argv) > 1 else None
     if cmd == "plans":
         capture_plans(sys.argv[2] if len(sys.argv) > 2 else "before")
-    elif cmd == "profile-knn":
-        profile_knn(sys.argv[2] if len(sys.argv) > 2 else "orders")
-    elif cmd == "profile-global":
-        profile_global()
-    elif cmd == "profile-lisa":
-        profile_lisa()
-    elif cmd == "profile-dedup":
-        profile_dedup()
-    elif cmd == "profile-pip":
-        profile_pip()
-    elif cmd == "profile-ann":
-        profile_ann()
     elif cmd == "ivf-cogroup-smoke":
         ivf_cogroup_smoke(
             int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000
         )
     else:
-        raise SystemExit(f"unknown subcommand {cmd!r}")
+        raise SystemExit(__doc__ if cmd is None
+                         else f"unknown subcommand {cmd!r}")
 
 
 if __name__ == "__main__":

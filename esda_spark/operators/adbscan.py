@@ -21,7 +21,6 @@ Here every step is a distributed dataflow:
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -41,7 +40,7 @@ def dbscan(
     min_samples: int,
     cell_size: float | None = None,
     max_iterations: int = 40,
-    dense_contraction: bool | None = None,
+    dense_contraction: bool = True,
 ) -> DataFrame:
     """(id, cluster): distributed DBSCAN; cluster = min point id in the
     component, NOISE (-1) for noise points.
@@ -51,8 +50,8 @@ def dbscan(
     rounds instead of the O(component-diameter) min-label propagation
     used through round 3.
 
-    ``dense_contraction`` (default on; env ESDA_SPARK_DBSCAN_DENSE=0
-    disables) selects the exact grid path (`_dbscan_grid`): the eps
+    ``dense_contraction`` (default on; ``False`` runs the flat
+    band-edge path) selects the exact grid path (`_dbscan_grid`): the eps
     neighborhood graph of a density hot spot is a near-clique whose
     edge count grows QUADRATICALLY in local density — at 1M synthetic
     points one 100k draw materializes 32M band edges, and every
@@ -66,10 +65,6 @@ def dbscan(
     Gan & Tao SIGMOD 2015 exact grid DBSCAN, re-expressed as Spark
     dataflow.  ``cell_size`` only affects the flat path (the grid is
     eps/2 by construction)."""
-    if dense_contraction is None:
-        dense_contraction = (
-            os.environ.get("ESDA_SPARK_DBSCAN_DENSE", "1") != "0"
-        )
     if dense_contraction:
         return _dbscan_grid(points, eps, min_samples, max_iterations)
     return _dbscan_flat(points, eps, min_samples, cell_size,

@@ -19,19 +19,12 @@ do not accumulate storage.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# edge-count gate below which components run in-core on the driver:
-# star contraction pays ~2 shuffle stages x O(log n) rounds of fixed
-# job latency, which dwarfs the actual work on small graphs (the
-# ADBSCAN 150k regression in VERDICT r4).  2M edges is ~32 MB driver
-# memory — far below any driver heap, far above every "small" graph.
-_INCORE_EDGES = int(os.environ.get("ESDA_SPARK_CC_INCORE_EDGES", "2000000"))
+from esda_spark.operators import gate
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -104,11 +97,9 @@ def incore_components_arrays(
     return nodes, nodes[parent]
 
 
-def _incore_components(e: DataFrame) -> DataFrame:
-    """Driver-side components for small edge sets (see
+def _incore_components(spark, pdf: pd.DataFrame) -> DataFrame:
+    """Driver-side components of a collected (u, v) edge frame (see
     :func:`incore_components_arrays`)."""
-    spark = e.sparkSession
-    pdf = e.select("u", "v").toPandas()
     if len(pdf) == 0:
         return spark.createDataFrame([], "id long, component long")
     nodes, comp = incore_components_arrays(
@@ -132,7 +123,7 @@ def connected_components(
     isolated nodes are the caller's concern (coalesce with their own id).
 
     Edge sets at or below ``incore_max_edges`` (default
-    ``ESDA_SPARK_CC_INCORE_EDGES`` = 2M) collect to the driver and run
+    ``gate.CC_INCORE_EDGES`` = 2M) collect to the driver and run
     a vectorized union-find — small graphs otherwise pay O(log n) star
     rounds of pure Spark job latency (the 150k-point ADBSCAN regression
     of round 4).  Pass ``incore_max_edges=0`` to force the distributed
@@ -156,9 +147,11 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    limit = _INCORE_EDGES if incore_max_edges is None else incore_max_edges
-    if limit > 0 and e.count() <= limit:
-        comp = _incore_components(e)
+    limit = (gate.CC_INCORE_EDGES if incore_max_edges is None
+             else incore_max_edges)
+    pdf = gate.collect_within(e.select("u", "v"), limit)
+    if pdf is not None:
+        comp = _incore_components(edges.sparkSession, pdf)
         jmap = sc._jsc.getPersistentRDDs()
         for rid in set(jmap.keySet().toArray()) - pids_before:
             jr = jmap.get(rid)

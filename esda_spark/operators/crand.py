@@ -38,7 +38,6 @@ are pinned and outputs deterministic across runs and partitionings.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -46,6 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from esda_spark.operators import gate
 from esda_spark.operators.significance import permutation_significance
 
 # Site-chunk budget (m*k) and rep-block width for the streaming path;
@@ -53,17 +53,6 @@ from esda_spark.operators.significance import permutation_significance
 # what makes the kernel scale with cores instead of RAM bandwidth.
 _CHUNK_ELEMS = 8_000_000
 _REP_BLOCK = 2048
-
-# mode="auto" switchover: below this many sites the broadcast path
-# (driver collect + broadcast of the value vector) measurably wins —
-# interleaved A/B at 1M sites: broadcast 24.7 s vs tiled 35-45 s at
-# 9999 perms on local[8], a tie at 999 perms — so the switch sits
-# where the O(n) driver collect itself becomes the wall (~160 MB of
-# doubles at 2e7 sites), not where the tiled path merely exists.
-# Override with ESDA_SPARK_CRAND_TILED_ROWS; see PLANS.md.
-_AUTO_TILED_ROWS = int(
-    os.environ.get("ESDA_SPARK_CRAND_TILED_ROWS", "20000000")
-)
 
 
 # --- stat kernels -----------------------------------------------------------
@@ -285,13 +274,14 @@ def conditional_randomization(
               value pool.  Tiles are uniform random samples of the
               global value distribution, so the conditional null is
               statistically equivalent; nothing n-sized ever reaches
-              the driver or a broadcast).  "auto" (default) counts the
-              sites and picks: broadcast below ``_AUTO_TILED_ROWS``
+              the driver or a broadcast).  "auto" (default) collects
+              the values when the site count is within
+              ``gate.CRAND_BROADCAST_SITES`` and runs broadcast
               (measured faster through 1e6 sites, and the reference's
               exact-draw semantics are preserved where users test
-              against the reference), tiled at or above it — the
-              regime where the broadcast path's O(n) driver collect
-              becomes the binding constraint.
+              against the reference), tiled above it — the regime
+              where the broadcast path's O(n) driver collect becomes
+              the binding constraint.
     gathered: optional precomputed :func:`gather_neighborhoods` output
               (id, wlist, self_weight[, tile]) — lets a fit that issues
               several crand calls over the same weights pay the edge
@@ -318,10 +308,11 @@ def conditional_randomization(
     Returns (id, p_sim [, moment cols] [, sims array<double>]), or the
     passthrough columns + p columns when ``base`` is used.
     """
+    pdf = None
     if mode == "auto":
-        if n_sites is None:
-            n_sites = values.count()
-        mode = "tiled" if n_sites >= _AUTO_TILED_ROWS else "broadcast"
+        pdf = gate.collect_within(values, gate.CRAND_BROADCAST_SITES,
+                                  size=n_sites)
+        mode = "tiled" if pdf is None else "broadcast"
     if mode == "tiled":
         return _crand_tiled(
             values, edges, observed, stat_func, permutations, seed,
@@ -333,7 +324,8 @@ def conditional_randomization(
     sc = spark.sparkContext
 
     zcols = [c for c in values.columns if c != "id"]
-    pdf = values.toPandas()  # unsorted collect; sort driver-side (cheap)
+    if pdf is None:
+        pdf = values.toPandas()  # unsorted collect; sort driver-side (cheap)
     n = len(pdf)
     ids_np = pdf["id"].to_numpy(np.int64)
     order_np = np.argsort(ids_np, kind="stable")

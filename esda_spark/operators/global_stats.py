@@ -212,7 +212,15 @@ def moran(
     z2ss, z4ss = _centered_moments(points, value_col, agg)
     s0, s1, s2 = s["s0"], s["s1"], s["s2"]
     inum = float(er.pyy) - mu * float(er.py) + mu * mu * s0
-    I = n / s0 * float(inum) / z2ss  # noqa: E741
+    if not abs(inum) > 1e-10 * abs(float(er.pyy)):
+        # the raw-value identity cancelled (a mean offset large next to
+        # the spread): same guard as _centered_moments, exact centered
+        # second pass
+        zf, zn = F.col("yf") - F.lit(mu), F.col("yn") - F.lit(mu)
+        inum = float(_edge_pair_agg(
+            w, points, value_col, F.sum(wc * zf * zn).alias("c")
+        ).c)
+    I = n / s0 * inum / z2ss  # noqa: E741
 
     EI = -1.0 / (n - 1)
     n2 = n * n

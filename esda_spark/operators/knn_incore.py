@@ -8,8 +8,8 @@ window sorts, checkpoint counts) regardless of input size; at the
 nothing").  This module is the gated fast path, following the same
 precedent as ``components._incore_components`` (round-4/5 accepted):
 when the TARGET side fits comfortably in a broadcast
-(``ESDA_SPARK_KNN_INCORE_TARGETS``, default 2M rows ≈ 110 MB of
-numpy arrays), collect it once, broadcast the grid index, and compute
+(``gate.KNN_INCORE_TARGETS``, 2M rows ≈ 110 MB of numpy arrays),
+collect it once, broadcast the grid index, and compute
 every focal's exact top-k inside ONE ``mapInPandas`` job:
 
 - zero shuffles (the focal side streams through in place),
@@ -40,18 +40,9 @@ focal goes to the next doubling round exactly as before.
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
-
-# Target-side row-count gate for the broadcast-kernel fast path.
-# ~55 B/row of numpy arrays broadcast to each Python worker; 2M rows
-# ≈ 110 MB — comfortable for local workers and cluster executors
-# alike, far above every driver-testdata table.  0 disables.
-INCORE_MAX_TARGETS = int(
-    float(os.environ.get("ESDA_SPARK_KNN_INCORE_TARGETS", 2_000_000))
-)
 
 _CY = 1 << 32
 _OFF = 1 << 20
@@ -275,28 +266,25 @@ def knn_batch(fid, fx, fy, idx, k, exclude_self, group_div):
 
 def knn_edges_incore(
     focals,
-    targets,
+    tpdf: pd.DataFrame,
     k: int,
     binary: bool = True,
     exclude_self: bool = True,
     keep_d2: bool = False,
     group_div: int | None = None,
-    n_targets: int | None = None,
 ):
     """Broadcast-kernel exact kNN edge build (the fast path).
 
-    ``focals``/``targets`` are DataFrames with (id, x, y); the target
-    side is collected and broadcast, the focal side streams through a
-    single ``mapInPandas`` job.  Output matches the distributed
+    ``focals`` is a DataFrame with (id, x, y); ``tpdf`` is the target
+    side already collected (:func:`gate.collect_within`) with the same
+    columns.  Its grid index is broadcast and the focal side streams
+    through a single ``mapInPandas`` job.  Output matches the distributed
     builder bit-for-bit (same d2 arithmetic, same (d2, neighbor)
     tie-break, same weight column).  The result is eagerly
     materialized (localCheckpoint) exactly like the distributed
     builder, so "build time" keeps meaning "materialized edges".
     """
-    from pyspark.sql import functions as F
-
-    spark = targets.sparkSession
-    tpdf = targets.select("id", "x", "y").toPandas()
+    spark = focals.sparkSession
     tid = tpdf["id"].to_numpy(np.int64)
     tx = tpdf["x"].to_numpy(np.float64)
     ty = tpdf["y"].to_numpy(np.float64)

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from esda_spark.functions.mathx import chi2_sf, norm_sf
+from esda_spark.operators import gate
 from esda_spark.operators.crand import conditional_randomization
 from esda_spark.operators.lag import spatial_lag
 from esda_spark.operators.weights import add_self_edges, transform_weights
@@ -147,9 +148,7 @@ def _crand_on_base(
     cardinality bound (one aggregate over the raw edges).  Tiled
     regime (beyond the broadcast gate): classic path — crand assembles
     its own one-exchange tile base; the p columns join back by id."""
-    from esda_spark.operators.crand import _AUTO_TILED_ROWS
-
-    if n < _AUTO_TILED_ROWS:
+    if gate.fits(n, gate.CRAND_BROADCAST_SITES):
         bk = base.select(
             *out_cols, F.col(obs_col).alias("observed"),
             "wlist", "self_weight",
@@ -969,12 +968,10 @@ def moran_local_partial(
         # dominant shuffle by the component count).  The mode is decided
         # ONCE from n so the tiled regime gathers tile-partitioned and
         # every component call reuses the checkpointed partitioning.
-        from esda_spark.operators.crand import (
-            _AUTO_TILED_ROWS,
-            gather_neighborhoods,
-        )
+        from esda_spark.operators.crand import gather_neighborhoods
 
-        mode = "tiled" if n >= _AUTO_TILED_ROWS else "broadcast"
+        mode = ("broadcast" if gate.fits(n, gate.CRAND_BROADCAST_SITES)
+                else "tiled")
         # persist, NOT localCheckpoint: a cached repartition keeps its
         # tile partitioning through the cogroup (InMemoryTableScan
         # reports the cached plan's outputPartitioning), so the tiled

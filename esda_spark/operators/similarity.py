@@ -13,13 +13,16 @@
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from esda_spark.operators import gate
+
+_TOPK_SCHEMA = "query_id long, vec_id long, rank int, sim double"
 
 
 def _dot(a, b):
@@ -123,24 +126,29 @@ def cosine_topk(
             .select("query_id", "vec_id", "rank", "sim")
         )
 
+    spark = embeddings.sparkSession
     qrows = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
     ).collect()
+    if not qrows:
+        return spark.createDataFrame([], _TOPK_SCHEMA)
     qids = np.array([r.query_id for r in qrows], dtype=np.int64)
     Q = np.array([np.asarray(r.qv, dtype=np.float64) for r in qrows])
     Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    spark = embeddings.sparkSession
-    n_emb = (embeddings.count() if _ANN_INCORE_ROWS else None)
-    if (_ANN_INCORE_ROWS and n_emb <= _ANN_INCORE_ROWS and len(qids)
-            and len(qids) * n_emb <= 50_000_000):
-        # in-core fast path (round 6): the query side is collected
-        # either way; when the corpus also fits the gate, score the
-        # single (q, n) BLAS matrix on the driver — same normalize,
-        # same dgemm library, same (sim desc, vec_id asc) ranking —
-        # instead of a Python-worker stage plus a window merge.
-        emb_pdf = embeddings.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")
-        ).toPandas()
+    # in-core fast path (round 6): the query side is collected either
+    # way; when the corpus also fits the gate (and the (q, n) score
+    # matrix its own budget), score the single BLAS matrix on the
+    # driver — same normalize, same dgemm library, same (sim desc,
+    # vec_id asc) ranking — instead of a Python-worker stage plus a
+    # window merge.
+    emb_pdf = gate.collect_within(
+        embeddings.select(F.col(id_col).alias("vec_id"),
+                          F.col(vec_col).alias("cv")),
+        min(gate.ANN_INCORE_ROWS, gate.ANN_INCORE_SCORES // len(qids)),
+    )
+    if emb_pdf is not None:
+        if len(emb_pdf) == 0:
+            return spark.createDataFrame([], _TOPK_SCHEMA)
         cid = emb_pdf["vec_id"].to_numpy(np.int64)
         C = np.vstack(emb_pdf["cv"].to_numpy()).astype(np.float64)
         C /= np.linalg.norm(C, axis=1, keepdims=True)
@@ -161,10 +169,7 @@ def cosine_topk(
             "rank": rank[rank <= k].astype(np.int32),
             "sim": sim[sel],
         })
-        return spark.createDataFrame(
-            out,
-            schema="query_id long, vec_id long, rank int, sim double",
-        )
+        return spark.createDataFrame(out, _TOPK_SCHEMA)
     bc = spark.sparkContext.broadcast((qids, Qn))
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -433,24 +438,23 @@ def _lsh_topk_incore(emb_pdf, q_pdf, dim, k, num_planes, seed,
     })
 
 
-# corpus-row gate for the driver-side LSH top-k (both sides collected;
-# ~100 MB of float64 at the default).  0 disables.
-_ANN_INCORE_ROWS = int(
-    float(os.environ.get("ESDA_SPARK_ANN_INCORE_ROWS", 200_000))
-)
-
-_PROF = bool(os.environ.get("ESDA_SPARK_PROF"))
-
-
-def _prof(label, t0):
-    import sys
-    import time as _t
-
-    t1 = _t.perf_counter()
-    if _PROF:
-        print(f"[prof] {label}: {t1 - t0:.3f}s", file=sys.stderr,
-              flush=True)
-    return t1
+def _collect_sides(embeddings, queries, id_col, vec_col, query_id_col):
+    """(corpus (vec_id, cv), queries (query_id, qv)) as driver frames
+    when each side fits ``gate.ANN_INCORE_ROWS``, else None.  The
+    corpus goes first: above the gate that costs one count job."""
+    emb_pdf = gate.collect_within(
+        embeddings.select(F.col(id_col).alias("vec_id"),
+                          F.col(vec_col).alias("cv")),
+        gate.ANN_INCORE_ROWS,
+    )
+    if emb_pdf is None:
+        return None
+    q_pdf = gate.collect_within(
+        queries.select(F.col(query_id_col).alias("query_id"),
+                       F.col(vec_col).alias("qv")),
+        gate.ANN_INCORE_ROWS,
+    )
+    return None if q_pdf is None else (emb_pdf, q_pdf)
 
 
 def lsh_topk(
@@ -488,22 +492,17 @@ def lsh_topk(
     """
     if multiprobe not in (0, 1):
         raise ValueError("multiprobe must be 0 or 1 (Hamming probe radius)")
-    if (_ANN_INCORE_ROWS
-            and embeddings.count() <= _ANN_INCORE_ROWS
-            and queries.count() <= _ANN_INCORE_ROWS):
+    sides = _collect_sides(embeddings, queries, id_col, vec_col,
+                           query_id_col)
+    if sides is not None:
         # in-core fast path (round 6): both sides collected, identical
         # draws/buckets/probes/candidate set, sims via the sequential
         # fold, same ranking — two counts + two collects instead of
-        # ~6 jobs of Python-stage and broadcast latency.  (count +
-        # toPandas beats a limit-probe: CollectLimit executes in
-        # scale-up stages, several sequential partial jobs.)
-        emb_pdf = embeddings.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")
-        ).toPandas()
-        q_pdf = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-        ).toPandas()
+        # ~6 jobs of Python-stage and broadcast latency.
+        emb_pdf, q_pdf = sides
+        spark = embeddings.sparkSession
+        if len(emb_pdf) == 0 or len(q_pdf) == 0:
+            return spark.createDataFrame([], _TOPK_SCHEMA)
         np_planes = (num_planes if num_planes is not None
                      else auto_num_planes(
                          n_corpus if n_corpus is not None
@@ -512,10 +511,7 @@ def lsh_topk(
             emb_pdf, q_pdf, dim, k, np_planes, seed,
             num_tables, multiprobe,
         )
-        return embeddings.sparkSession.createDataFrame(
-            out,
-            schema="query_id long, vec_id long, rank int, sim double",
-        )
+        return spark.createDataFrame(out, _TOPK_SCHEMA)
     if num_planes is None:
         # auto-sizing needs the corpus count; callers that know it pass
         # n_corpus and skip the count job (ADVICE r5)
@@ -770,19 +766,14 @@ def kmeans_fit(
 def _ivf_topk_incore(emb_pdf, q_pdf, Cn, k, nprobe) -> "pd.DataFrame":
     """Driver-side IVF top-k — identical assignment/probe/sim/rank
     arithmetic as the distributed plan (see ivf_topk)."""
-    import time as _tt
-    _k0 = _tt.perf_counter()
     cid = emb_pdf["vec_id"].to_numpy(np.int64)
     C = np.vstack(emb_pdf["cv"].to_numpy()).astype(np.float64)
-    _k0 = _prof("ivf.k.vstackC", _k0)
     Xn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
     lists = np.argmax(Xn @ Cn.T, axis=1)
-    _k0 = _prof("ivf.k.assign", _k0)
     qid = q_pdf["query_id"].to_numpy(np.int64)
     Q = np.vstack(q_pdf["qv"].to_numpy()).astype(np.float64)
     Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
     probes = np.argsort(-(Qn @ Cn.T), axis=1)[:, :nprobe]
-    _k0 = _prof("ivf.k.probes", _k0)
     order = np.argsort(lists, kind="stable")
     sl = lists[order]
     lo = np.searchsorted(sl, probes.ravel())
@@ -802,13 +793,9 @@ def _ivf_topk_incore(emb_pdf, q_pdf, Cn, k, nprobe) -> "pd.DataFrame":
         return pd.DataFrame(
             {"query_id": [], "vec_id": [], "rank": [], "sim": []}
         )
-    _k0 = _prof("ivf.k.gather", _k0)
-    _cpu0 = _tt.process_time()
     qn = np.sqrt(_seq_dot(Q, Q))
     cn = np.sqrt(_seq_dot(C, C))
     sim = _seq_dot(Q, C, qrow, crow) / (qn[qrow] * cn[crow])
-    _prof(f"ivf.k.sims cpu={_tt.process_time() - _cpu0:.3f}", _k0)
-    _k0 = _tt.perf_counter()
     so = np.lexsort((cid[crow], -sim, qid[qrow]))
     qs = qid[qrow][so]
     starts = np.nonzero(np.r_[True, qs[1:] != qs[:-1]])[0]
@@ -862,36 +849,20 @@ def ivf_topk(
     Cn = centers / np.maximum(
         np.linalg.norm(centers, axis=1, keepdims=True), 1e-12
     )
-    import time as _t
-    _t0 = _t.perf_counter()
-    if (_ANN_INCORE_ROWS and mode in ("auto", "broadcast")
-            and embeddings.count() <= _ANN_INCORE_ROWS
-            and 0 < queries.count() <= _ANN_INCORE_ROWS):
-        _t0 = _prof("ivf.counts", _t0)
+    sides = (_collect_sides(embeddings, queries, id_col, vec_col,
+                            query_id_col)
+             if mode in ("auto", "broadcast") else None)
+    if sides is not None:
         # in-core fast path (round 6): same centroid assignment
         # (argmax of the identical normalized matmul), same probe
         # selection, sims via the sequential fold, same ranking — two
         # counts + two collects instead of two Python stages, the
         # auto-mode count job, a join and a window.
-        emb_pdf = embeddings.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")
-        ).toPandas()
-        _t0 = _prof("ivf.collect_emb", _t0)
-        q_pdf = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-        ).toPandas()
-        _t0 = _prof("ivf.collect_q", _t0)
-        if len(emb_pdf):
-            out = _ivf_topk_incore(emb_pdf, q_pdf, Cn, k, nprobe)
-            _t0 = _prof("ivf.kernel", _t0)
-            res = spark.createDataFrame(
-                out,
-                schema="query_id long, vec_id long, rank int,"
-                       " sim double",
-            )
-            _prof("ivf.createDataFrame", _t0)
-            return res
+        emb_pdf, q_pdf = sides
+        if len(emb_pdf) == 0 or len(q_pdf) == 0:
+            return spark.createDataFrame([], _TOPK_SCHEMA)
+        out = _ivf_topk_incore(emb_pdf, q_pdf, Cn, k, nprobe)
+        return spark.createDataFrame(out, _TOPK_SCHEMA)
     bc = spark.sparkContext.broadcast(Cn)
 
     def assign_corpus(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1002,8 +973,6 @@ def near_dup_groups(
     collects anywhere, so the whole pipeline holds at corpus scale.
     mode="exact" (all-pairs) exists for validation and small inputs.
     """
-    import os
-
     from esda_spark.operators.components import (
         connected_components,
         incore_components_arrays,
@@ -1025,9 +994,7 @@ def near_dup_groups(
             )
         )
 
-    gate = int(float(os.environ.get("ESDA_SPARK_DEDUP_INCORE_PAIRS",
-                                    200_000)))
-    if mode == "lsh" and gate:
+    if mode == "lsh":
         # in-core fast path (components-operator precedent): bucket
         # candidates are id pairs only (one signature materialization,
         # no embedding arrays through the self-join); the exact cosine
@@ -1043,14 +1010,19 @@ def near_dup_groups(
         b = sig.select(F.col("vec_id").alias("vec_b"), "table", "bucket")
         # raw bucket-pair rows (dups deduped driver-side — cheaper
         # than a distinct exchange; the gate bounds the collect at
-        # num_tables x distinct pairs)
-        cand_pdf = (
+        # num_tables x distinct pairs), checkpointed lazily so the
+        # gate's count materializes the join once and the collect
+        # reads those rows
+        cand = (
             a.join(b, ["table", "bucket"])
             .where(F.col("vec_a") < F.col("vec_b"))
             .select("vec_a", "vec_b")
-            .limit(gate * num_tables + 1).toPandas()
+            .localCheckpoint(eager=False)
         )
-        if len(cand_pdf) <= gate * num_tables:
+        cand_pdf = gate.collect_within(
+            cand, gate.DEDUP_INCORE_PAIRS * num_tables
+        )
+        if cand_pdf is not None:
             ids = embeddings.select(F.col(id_col).alias("vec_id"))
             if len(cand_pdf) == 0:
                 return ids.select(

@@ -16,7 +16,6 @@ join; the entropies are plain grouped aggregates of p·log p.
 from __future__ import annotations
 
 import math
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -24,18 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from esda_spark.operators import gate
 from esda_spark.plans.cells import pack_cell, with_cell
-
-# Ring-count gate below which the polygon layer's geometry is
-# broadcast to the PIP refine kernel as a dict instead of riding every
-# candidate row: the cell join then carries only (id, x, y, poly_id)
-# into Python — the xs/ys arrays crossed the Arrow boundary once per
-# CANDIDATE before (guide §4.1: pass only the columns the function
-# needs).  200k rings ≈ tens of MB broadcast; above it the original
-# carry-the-arrays path applies unchanged.
-_PIP_BCAST_RINGS = int(
-    float(os.environ.get("ESDA_SPARK_PIP_BCAST_RINGS", 200_000))
-)
 
 
 def _poly_cells(polygons: DataFrame, cell_size: float) -> DataFrame:
@@ -89,17 +78,14 @@ def point_in_polygon(
     """
     idc, xc, yc = point_cols
     pts = with_cell(points.select(idc, xc, yc), cell_size)
-    rings_pdf = None
-    if _PIP_BCAST_RINGS:
-        # one probe job doubles as the gate AND the geometry collect
-        # (limit threshold+1: an oversized layer falls through to the
-        # carry-the-arrays path without a separate count job)
-        rings_pdf = (
-            polygons.select("poly_id", "xs", "ys")
-            .limit(_PIP_BCAST_RINGS + 1).toPandas()
-        )
-        if len(rings_pdf) > _PIP_BCAST_RINGS:
-            rings_pdf = None
+    # the geometry is broadcast only when its VERTEX count fits the gate
+    # (one aggregate job; a ring count would let a few huge rings
+    # through); above it the carry-the-arrays path applies
+    n_vertices = polygons.agg(F.sum(F.size("xs"))).first()[0] or 0
+    rings_pdf = gate.collect_within(
+        polygons.select("poly_id", "xs", "ys"), gate.PIP_BCAST_VERTICES,
+        size=n_vertices,
+    )
     if rings_pdf is not None:
         # broadcast-rings fast path: geometry crosses to Python once,
         # candidates carry only (id, x, y, poly_id), and the kernel
@@ -217,14 +203,12 @@ def knn_join(
     # side streams through the kernel at any size, so e.g. ADBSCAN's
     # 1-NN extension (millions of focals onto a thinned sample)
     # qualifies whenever the sample fits the gate.
-    from esda_spark.operators.knn_incore import (
-        INCORE_MAX_TARGETS,
-        knn_edges_incore,
-    )
+    from esda_spark.operators.knn_incore import knn_edges_incore
 
-    if INCORE_MAX_TARGETS and rpts.count() <= INCORE_MAX_TARGETS:
+    tpdf = gate.collect_within(rpts, gate.KNN_INCORE_TARGETS)
+    if tpdf is not None:
         edges = knn_edges_incore(
-            lpts, rpts, k, binary=True, exclude_self=False,
+            lpts, tpdf, k, binary=True, exclude_self=False,
             keep_d2=True, group_div=group_div,
         )
     else:
@@ -235,7 +219,8 @@ def knn_join(
         levels = _density_levels(lpts, rpts, cell_size,
                                  density_threshold=max(4 * k, 32),
                                  max_levels=12,
-                                 flat_budget=int(2e8) if k == 1 else None)
+                                 flat_budget=(gate.FLAT_RING_CANDIDATES_K1
+                                              if k == 1 else None))
         edges = _knn_rounds_multi(
             levels, rpts, k, cell_size, binary=True, max_rounds=12,
             pids_before=pids_before, exclude_self=False, keep_d2=True,

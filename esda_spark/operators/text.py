@@ -380,10 +380,9 @@ def minhash_dedup_groups(
     edges — near-dup edge sets are sparse by construction since LSH
     thresholds candidate volume).
     """
-    import os
-
     import numpy as np
 
+    from esda_spark.operators import gate
     from esda_spark.operators.components import (
         connected_components,
         incore_components_arrays,
@@ -396,17 +395,21 @@ def minhash_dedup_groups(
     sig = minhash_signatures(
         docs, text_col, id_col, num_hashes, shingle_n
     ).localCheckpoint(eager=True)
-    cand = lsh_candidate_pairs(sig, num_hashes=num_hashes, bands=bands)
+    # checkpoint the candidates (lazily: the gate's count materializes
+    # them) so the count, the collect and the distributed verify, which
+    # references them three times, all read rows instead of a re-run
+    # banding join
+    cand = lsh_candidate_pairs(
+        sig, num_hashes=num_hashes, bands=bands
+    ).localCheckpoint(eager=False)
     # In-core fast path (the components-operator precedent): candidate
     # sets are LSH-thresholded — tiny relative to the corpus — so
     # below the gate the verify (exact shingle-set jaccard), the
     # transitive closure and the canonical selection all run on the
     # driver from TWO collects (pairs; candidate docs' shingle sets),
     # and only the final per-doc broadcast join stays distributed.
-    gate = int(float(os.environ.get("ESDA_SPARK_DEDUP_INCORE_PAIRS",
-                                    200_000)))
-    cand_pdf = cand.limit(gate + 1).toPandas() if gate else None
-    if cand_pdf is not None and len(cand_pdf) <= gate:
+    cand_pdf = gate.collect_within(cand, gate.DEDUP_INCORE_PAIRS)
+    if cand_pdf is not None:
         ids = docs.select(F.col(id_col).alias("doc_id"))
         if len(cand_pdf) == 0:
             return ids.select(
@@ -465,9 +468,7 @@ def minhash_dedup_groups(
             )
         )
 
-    # distributed path (above the gate, or gate disabled): checkpoint
-    # the candidates — the verify references them three times
-    cand = cand.localCheckpoint(eager=True)
+    # distributed path (above the gate, or gate disabled)
     verified = (
         ngram_jaccard_pairs(docs, cand, text_col, id_col, shingle_n)
         .where(F.col("jaccard") >= threshold)

@@ -36,11 +36,11 @@ the per-focal ranking partitions by point id (uniform), not by cell.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from esda_spark.operators import gate
 from esda_spark.plans.cells import (
     cell_key,
     expand_ring,
@@ -49,37 +49,6 @@ from esda_spark.plans.cells import (
 )
 
 EDGE_COLS = ("focal", "neighbor", "weight")
-
-# Level-0 ring-candidate rows below which skewed inputs skip the
-# quadtree refinement entirely: one round-1 settlement over <= this
-# many (focal, candidate) pairs is cheaper than the density pass it
-# replaces.  Env ESDA_SPARK_FLAT_RING_BUDGET overrides (0 disables the
-# flat gate so every skewed input refines, as before round 5).
-# Sized by measurement, not by what fits in memory: the quadtree pass
-# it would skip costs ~10 s of fixed jobs, and a settlement frame
-# shuffles ~36 B/candidate through the top-k window sort, so the
-# crossover sits at the ~1e7 pairs a round-1 sort absorbs in a few
-# seconds.  (The original 2e8 — "fits comfortably in a shuffle" — sent
-# the 150k orders table flat at 86M pairs, turning a 23 s build into
-# 255 s of shuffle-bound sort, core-count-independent; see BASELINE.md
-# round 5.)
-_FLAT_CANDIDATE_BUDGET = int(
-    float(os.environ.get("ESDA_SPARK_FLAT_RING_BUDGET", 1e7))
-)
-
-# optional phase profiling (round-6 measurement; zero cost when unset)
-_PROF = bool(os.environ.get("ESDA_SPARK_PROF"))
-
-
-def _prof(label: str, t0: float) -> float:
-    import sys
-    import time
-
-    t1 = time.perf_counter()
-    if _PROF:
-        print(f"[prof] {label}: {t1 - t0:.3f}s", file=sys.stderr, flush=True)
-    return t1
-
 
 def _estimate_cell_size(points: DataFrame, k: int) -> float:
     """Pick a cell size so one cell holds ~k points on average: the
@@ -126,14 +95,12 @@ def knn_edges(
     # of ~10 fixed jobs of density metadata + per-round joins + window
     # sorts.  Bit-identical results (same IEEE d2, same tie-break, same
     # guard); the distributed path below is unchanged above the gate.
-    from esda_spark.operators.knn_incore import (
-        INCORE_MAX_TARGETS,
-        knn_edges_incore,
-    )
+    from esda_spark.operators.knn_incore import knn_edges_incore
 
-    if INCORE_MAX_TARGETS and points.count() <= INCORE_MAX_TARGETS:
+    tpdf = gate.collect_within(base, gate.KNN_INCORE_TARGETS)
+    if tpdf is not None:
         return knn_edges_incore(
-            base, base, k, binary=binary, exclude_self=True,
+            base, tpdf, k, binary=binary, exclude_self=True,
             keep_d2=keep_d2,
         )
     # snapshot persistent-RDD ids before any materialization this build
@@ -149,9 +116,9 @@ def knn_edges(
         # stays cheap only when cells hold O(k) points
         density_threshold = max(4 * k, 32)
 
-    levels = _density_levels(base, base, cell_size, density_threshold,
-                             max_levels,
-                             flat_budget=int(2e8) if k == 1 else None)
+    levels = _density_levels(
+        base, base, cell_size, density_threshold, max_levels,
+        flat_budget=gate.FLAT_RING_CANDIDATES_K1 if k == 1 else None)
     return _knn_rounds_multi(levels, base, k, cell_size, binary,
                              max_rounds, pids_before, keep_d2=keep_d2)
 
@@ -187,8 +154,6 @@ def _density_levels(
     """
     from esda_spark.plans.cells import cell_xy, unpack_cell
 
-    import time as _time
-    _t = _time.perf_counter()
     src = density_src.select("x", "y")
     counts0 = (
         src.withColumn("_c", cell_key(F.col("x"), F.col("y"), cell_size))
@@ -198,7 +163,6 @@ def _density_levels(
     stats0 = counts0.agg(
         F.max("count").alias("mx"), F.sum("count").alias("tot")
     ).collect()[0]
-    _t = _prof("levels.counts0", _t)
     max0 = int(stats0.mx or 0)
     n_src = int(stats0.tot or 0)
     if max0 <= density_threshold:
@@ -215,11 +179,11 @@ def _density_levels(
     n_foc = n_src if same_side else focals.count()
     # k=1 callers raise the budget: their settlement is the map-side
     # min-struct aggregate, so candidates are combined before the
-    # exchange and never flow through a window sort.  The env override
-    # still disables the gate outright (budget 0 -> always refine).
-    budget = (_FLAT_CANDIDATE_BUDGET if flat_budget is None
-              else min(flat_budget, max(_FLAT_CANDIDATE_BUDGET, 1) * 20)
-              if _FLAT_CANDIDATE_BUDGET else 0)
+    # exchange and never flow through a window sort.  A zero module
+    # budget still disables the gate outright (always refine).
+    flat = gate.FLAT_RING_CANDIDATES
+    budget = (flat if flat_budget is None
+              else min(flat_budget, max(flat, 1) * 20) if flat else 0)
     if 9 * n_foc * max0 > budget:
         cx, cy = unpack_cell(F.col("_c"))
         cgrid = counts0.select(
@@ -249,7 +213,6 @@ def _density_levels(
             .collect()[0][0]
             or 0
         )
-        _t = _prof("levels.ring_volume", _t)
     else:
         volume = 9 * n_foc * max0
     if volume <= budget:
@@ -326,7 +289,6 @@ def _density_levels(
     lvl_values = sorted(
         r["lvl"] for r in labeled.select("lvl").distinct().collect()
     )
-    _t = _prof("levels.assign+label", _t)
     levels = [(0, sparse0)] + [
         (lv, labeled.where(F.col("lvl") == lv).select("id", "x", "y"))
         for lv in lvl_values
@@ -406,9 +368,6 @@ def _knn_rounds_multi(
     results: list[DataFrame] = []
     min_rad = 1
     force_world = False
-    if _PROF:
-        import time as _time
-        _t0r = _time.perf_counter()
     for _ in range(max_rounds):
         # a straggler tail (<= 2048 focals) finishes in ONE broadcast
         # brute-force job instead of more doubling-ring rounds — each
@@ -525,14 +484,10 @@ def _knn_rounds_multi(
             .localCheckpoint(eager=False)
         )
         n_rem = unsettled.count()
-        if _PROF:
-            _t0r = _prof(f"rounds.round{len(results)} n_rem={n_rem}", _t0r)
         if n_rem == 0:
             break
         force_world = n_rem <= 2048
         min_rad *= 2
-    if _PROF:
-        _t0r = _prof(f"rounds.loop_done rounds={len(results)}", _t0r)
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)
@@ -542,8 +497,6 @@ def _knn_rounds_multi(
     # RDD ids around the build and keep only the output's own blocks
     pids_mid = _pids()
     out = out.localCheckpoint(eager=True)
-    if _PROF:
-        _t0r = _prof("rounds.final_checkpoint", _t0r)
     keep = _pids() - pids_mid
     jmap = sc._jsc.getPersistentRDDs()
     for rid in (pids_mid - pids_before) - keep:

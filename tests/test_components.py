@@ -4,6 +4,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from esda_spark.operators import gate
+
 
 def _uf_components(n_nodes, edges):
     """Reference union-find over python ints: {node: min-id component}."""
@@ -28,45 +30,51 @@ def _uf_components(n_nodes, edges):
     return {v: find(v) for v in nodes}
 
 
-def _spark_components(spark, edges, **kw):
+def _spark_components(spark, edges):
     from esda_spark.operators.components import connected_components
 
     df = spark.createDataFrame(
         [(int(a), int(b)) for a, b in edges] or [(0, 0)],
         "focal long, neighbor long",
     )
-    out = connected_components(df, **kw)
+    out = connected_components(df)
     return {r.id: r.component for r in out.collect()}
 
 
-# incore_max_edges=0 forces the distributed star-contraction path;
-# the default exercises the driver-side vectorized union-find
+def _force(monkeypatch, incore):
+    """incore=0 forces the distributed star-contraction path; None
+    keeps the default budget (the driver-side vectorized union-find)."""
+    if incore is not None:
+        monkeypatch.setattr(gate, "CC_INCORE_EDGES", incore)
+
+
 @pytest.mark.parametrize("incore", [None, 0])
 @pytest.mark.parametrize("seed,n,m", [(1, 60, 40), (2, 200, 150),
                                       (3, 300, 600), (4, 50, 8)])
-def test_components_match_union_find(spark, seed, n, m, incore):
+def test_components_match_union_find(spark, monkeypatch, seed, n, m,
+                                     incore):
     rng = np.random.default_rng(seed)
     edges = [(int(a), int(b)) for a, b in rng.integers(0, n, size=(m, 2))
              if a != b]
     want = _uf_components(n, edges)
-    kw = {} if incore is None else {"incore_max_edges": incore}
-    got = _spark_components(spark, edges, **kw)
+    _force(monkeypatch, incore)
+    got = _spark_components(spark, edges)
     assert got == want
 
 
 @pytest.mark.parametrize("incore", [None, 0])
-def test_components_long_chain(spark, incore):
+def test_components_long_chain(spark, monkeypatch, incore):
     """Path graph: diameter = n-1, so min-label propagation would need
     ~n rounds; the star contraction must finish inside its default
     iteration budget (O(log n))."""
     n = 3000
     edges = [(i, i + 1) for i in range(n - 1)]
-    kw = {} if incore is None else {"incore_max_edges": incore}
-    got = _spark_components(spark, edges, **kw)
+    _force(monkeypatch, incore)
+    got = _spark_components(spark, edges)
     assert got == {i: 0 for i in range(n)}
 
 
-def test_components_deterministic_and_empty(spark):
+def test_components_deterministic_and_empty(spark, monkeypatch):
     rng = np.random.default_rng(7)
     edges = [(int(a), int(b)) for a, b in rng.integers(0, 120, size=(90, 2))
              if a != b]
@@ -75,18 +83,18 @@ def test_components_deterministic_and_empty(spark):
 
     empty = spark.createDataFrame([], "focal long, neighbor long")
     assert connected_components(empty).count() == 0
-    assert connected_components(empty, incore_max_edges=0).count() == 0
+    monkeypatch.setattr(gate, "CC_INCORE_EDGES", 0)
+    assert connected_components(empty).count() == 0
 
 
 @pytest.mark.parametrize("incore", [None, 0])
-def test_components_self_loops_and_duplicates(spark, incore):
-    kw = {} if incore is None else {"incore_max_edges": incore}
-    got = _spark_components(spark, [(5, 5), (1, 2), (2, 1), (1, 2), (8, 9)],
-                            **kw)
+def test_components_self_loops_and_duplicates(spark, monkeypatch, incore):
+    _force(monkeypatch, incore)
+    got = _spark_components(spark, [(5, 5), (1, 2), (2, 1), (1, 2), (8, 9)])
     assert got == {1: 1, 2: 1, 8: 8, 9: 8}
 
 
-def test_components_unconverged_raises(spark):
+def test_components_unconverged_raises(spark, monkeypatch):
     """Exhausting max_iterations without a certified star forest must
     raise, never emit labels from the unconverged edge set (ADVICE r4)."""
     from esda_spark.operators.components import connected_components
@@ -95,8 +103,9 @@ def test_components_unconverged_raises(spark):
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "focal long, neighbor long"
     )
+    monkeypatch.setattr(gate, "CC_INCORE_EDGES", 0)
     with pytest.raises(RuntimeError, match="star forest"):
-        connected_components(df, max_iterations=1, incore_max_edges=0)
+        connected_components(df, max_iterations=1)
 
 
 def test_knn_join_group_div_respects_groups(spark):

@@ -47,6 +47,21 @@ def test_moran_binary_weights(fixture):
     assert res["I"] == pytest.approx(want["I"], rel=1e-12)
 
 
+def test_moran_large_mean_offset(spark, fixture):
+    """A mean offset of 1e8 cancels the raw-value numerator identity
+    (sum w yf yn - mu sum w (yf+yn) + mu^2 s0) down to noise; I must not
+    move.  y is rounded to 1/1024 so y + 1e8 is exact in float64 (ulp
+    1.5e-8): any difference comes from the estimator, not the input."""
+    y = np.round(fixture["y"] * 1024) / 1024
+    pts = spark.createDataFrame(
+        [(i, float(v), float(v + 1e8)) for i, v in enumerate(y)],
+        "id long, y double, y_off double",
+    )
+    base = gs.moran(pts, fixture["edges"], "y", "r")["I"]
+    shifted = gs.moran(pts, fixture["edges"], "y_off", "r")["I"]
+    assert shifted == pytest.approx(base, abs=1e-9)
+
+
 def test_geary_matches_oracle(fixture):
     res = gs.geary(fixture["pts"], fixture["edges"], "y_cont", "r")
     w = onp.row_standardize(fixture["edges_np"], np.ones(len(fixture["edges_np"])))

@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from esda_spark.operators import knn_incore as KI
+from esda_spark.operators import gate
 from esda_spark.operators import weights as W
 from tests import oracle_numpy as onp
 
@@ -36,7 +36,7 @@ def _edge_set(df, keep_d2=False):
 def test_incore_vs_distributed_knn_edges(spark, monkeypatch):
     xy, pts = _skewed_points(spark)
     fast = W.knn_edges(pts, k=8, keep_d2=True)
-    monkeypatch.setattr(KI, "INCORE_MAX_TARGETS", 0)
+    monkeypatch.setattr(gate, "KNN_INCORE_TARGETS", 0)
     dist = W.knn_edges(pts, k=8, keep_d2=True)
     assert _edge_set(fast, keep_d2=True) == _edge_set(dist, keep_d2=True)
     # and both equal the brute-force reference
@@ -67,7 +67,7 @@ def test_incore_vs_distributed_knn_join(spark, monkeypatch):
         "id long, x double, y double")
     fast = knn_join(left, right, k=3).select(
         "left_id", "right_id", "rank").collect()
-    monkeypatch.setattr(KI, "INCORE_MAX_TARGETS", 0)
+    monkeypatch.setattr(gate, "KNN_INCORE_TARGETS", 0)
     dist = knn_join(left, right, k=3).select(
         "left_id", "right_id", "rank").collect()
     assert {tuple(r) for r in fast} == {tuple(r) for r in dist}
@@ -99,7 +99,7 @@ def test_incore_knn_join_group_div(spark, monkeypatch):
         return {(r.left_id, r.right_id) for r in out}
 
     fast = run()
-    monkeypatch.setattr(KI, "INCORE_MAX_TARGETS", 0)
+    monkeypatch.setattr(gate, "KNN_INCORE_TARGETS", 0)
     assert fast == run()
 
 
@@ -125,7 +125,7 @@ def test_minhash_dedup_groups_incore_vs_distributed(spark, monkeypatch):
         "doc_id long, text string",
     )
     fast = minhash_dedup_groups(docs, threshold=0.8).collect()
-    monkeypatch.setenv("ESDA_SPARK_DEDUP_INCORE_PAIRS", "0")
+    monkeypatch.setattr(gate, "DEDUP_INCORE_PAIRS", 0)
     dist = minhash_dedup_groups(docs, threshold=0.8).collect()
     assert {tuple(r) for r in fast} == {tuple(r) for r in dist}
 
@@ -142,7 +142,7 @@ def test_near_dup_groups_incore_vs_distributed(spark, monkeypatch):
     )
     fast = near_dup_groups(emb, threshold=0.99, mode="lsh",
                            num_planes=4, num_tables=4).collect()
-    monkeypatch.setenv("ESDA_SPARK_DEDUP_INCORE_PAIRS", "0")
+    monkeypatch.setattr(gate, "DEDUP_INCORE_PAIRS", 0)
     dist = near_dup_groups(emb, threshold=0.99, mode="lsh",
                            num_planes=4, num_tables=4).collect()
     assert {tuple(r) for r in fast} == {tuple(r) for r in dist}
@@ -170,7 +170,7 @@ def test_lsh_topk_incore_vs_distributed(spark, monkeypatch):
     fast = {(r.query_id, r.vec_id, r.rank, r.sim)
             for r in S.lsh_topk(emb, q, dim=16, k=5, num_planes=5,
                                 num_tables=4).collect()}
-    monkeypatch.setattr(S, "_ANN_INCORE_ROWS", 0)
+    monkeypatch.setattr(gate, "ANN_INCORE_ROWS", 0)
     dist = {(r.query_id, r.vec_id, r.rank, r.sim)
             for r in S.lsh_topk(emb, q, dim=16, k=5, num_planes=5,
                                 num_tables=4).collect()}
@@ -186,7 +186,7 @@ def test_cosine_topk_incore_vs_distributed(spark, monkeypatch):
     q = _q_of(emb)
     fast = {(r.query_id, r.vec_id, r.rank)
             for r in S.cosine_topk(emb, q, k=5).collect()}
-    monkeypatch.setattr(S, "_ANN_INCORE_ROWS", 0)
+    monkeypatch.setattr(gate, "ANN_INCORE_ROWS", 0)
     dist = {(r.query_id, r.vec_id, r.rank)
             for r in S.cosine_topk(emb, q, k=5).collect()}
     # rank-level parity: both paths score with BLAS, whose LSBs are
@@ -204,11 +204,32 @@ def test_ivf_topk_incore_vs_distributed(spark, monkeypatch):
     fast = {(r.query_id, r.vec_id, r.rank, r.sim)
             for r in S.ivf_topk(emb, q, centers, k=5,
                                 nprobe=2).collect()}
-    monkeypatch.setattr(S, "_ANN_INCORE_ROWS", 0)
+    monkeypatch.setattr(gate, "ANN_INCORE_ROWS", 0)
     dist = {(r.query_id, r.vec_id, r.rank, r.sim)
             for r in S.ivf_topk(emb, q, centers, k=5,
                                 nprobe=2).collect()}
     assert fast == dist
+
+
+@pytest.mark.parametrize("side", ["corpus", "queries"])
+def test_ann_topk_empty_side(spark, side):
+    """An empty corpus or query side gives an empty top-k with the
+    output schema from every ANN operator, not a crash."""
+    import esda_spark.operators.similarity as S
+
+    emb = _emb_fixture(spark, n=40)
+    q = _q_of(emb)
+    if side == "corpus":
+        emb = emb.where(F.lit(False))
+    else:
+        q = q.where(F.lit(False))
+    centers = np.random.default_rng(1).normal(size=(4, 16))
+    for out in (S.cosine_topk(emb, q, k=5),
+                S.lsh_topk(emb, q, dim=16, k=5, num_planes=4),
+                S.ivf_topk(emb, q, centers, k=5, nprobe=2)):
+        assert out.schema.simpleString() == (
+            "struct<query_id:bigint,vec_id:bigint,rank:int,sim:double>")
+        assert out.count() == 0
 
 
 def test_gather_tiles_seed_mismatch_raises(spark):

@@ -41,6 +41,30 @@ def test_pip_axis_aligned_exact(spark, pts):
         assert got[i] == want, (i, x, y)
 
 
+def test_pip_vertex_gate_takes_array_path(spark, pts, monkeypatch):
+    """The broadcast-geometry gate bounds vertices, not rings: a layer
+    of 36 rings (144 vertices) under a 143-vertex budget must take the
+    carry-the-arrays path and return the same (id, poly_id) rows."""
+    from esda_spark.operators import gate
+
+    xy, df = pts
+    polys = rotated_tiling(spark, 6, BBOX, theta=0.3)
+    bcast = {tuple(r) for r in point_in_polygon(df, polys, 3.0).collect()}
+    seen = []
+    collect_within = gate.collect_within
+
+    def spy(frame, limit, size=None):
+        out = collect_within(frame, limit, size)
+        seen.append((limit, size, out is None))
+        return out
+
+    monkeypatch.setattr(gate, "collect_within", spy)
+    monkeypatch.setattr(gate, "PIP_BCAST_VERTICES", 36 * 4 - 1)
+    arrays = {tuple(r) for r in point_in_polygon(df, polys, 3.0).collect()}
+    assert seen == [(143, 144, True)]
+    assert arrays == bcast and len(bcast) == len(xy)
+
+
 def test_pip_rotated_exact(spark, pts):
     xy, df = pts
     theta = 0.3
