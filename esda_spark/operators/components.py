@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from esda_spark.operators import gate
+from esda_spark.plans.checkpoint import persisted_rdd_ids, unpersist_rdds
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -136,7 +137,7 @@ def connected_components(
     shows is the star forest rooted at component minima.
     """
     sc = edges.sparkSession.sparkContext
-    pids_before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+    pids_before = persisted_rdd_ids(sc)
 
     e = (
         edges.select(
@@ -152,11 +153,7 @@ def connected_components(
     pdf = gate.collect_within(e.select("u", "v"), limit)
     if pdf is not None:
         comp = _incore_components(edges.sparkSession, pdf)
-        jmap = sc._jsc.getPersistentRDDs()
-        for rid in set(jmap.keySet().toArray()) - pids_before:
-            jr = jmap.get(rid)
-            if jr is not None:
-                jr.unpersist()
+        unpersist_rdds(sc, persisted_rdd_ids(sc) - pids_before)
         return comp
     prev_sig = None
     converged = False
@@ -189,11 +186,7 @@ def connected_components(
         # never emit labels from an unconverged edge set: a caller passing
         # a small max_iterations would otherwise get silently wrong
         # components (star contraction needs O(log n) rounds)
-        jmap = sc._jsc.getPersistentRDDs()
-        for rid in set(jmap.keySet().toArray()) - pids_before:
-            jr = jmap.get(rid)
-            if jr is not None:
-                jr.unpersist()
+        unpersist_rdds(sc, persisted_rdd_ids(sc) - pids_before)
         raise RuntimeError(
             f"connected_components did not reach a certified star forest "
             f"within max_iterations={max_iterations}; raise the bound "
@@ -208,12 +201,8 @@ def connected_components(
         )
         .distinct()
     )
-    pids_mid = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+    pids_mid = persisted_rdd_ids(sc)
     comp = comp.localCheckpoint(eager=True)
-    keep = set(sc._jsc.getPersistentRDDs().keySet().toArray()) - pids_mid
-    jmap = sc._jsc.getPersistentRDDs()
-    for rid in (pids_mid - pids_before) - keep:
-        jr = jmap.get(rid)
-        if jr is not None:
-            jr.unpersist()
+    keep = persisted_rdd_ids(sc) - pids_mid
+    unpersist_rdds(sc, (pids_mid - pids_before) - keep)
     return comp

@@ -75,12 +75,9 @@ CRAND_BROADCAST_SITES = 20_000_000
 # pairs a round-1 sort absorbs in a few seconds.  (The original 2e8 --
 # "fits comfortably in a shuffle" -- sent the 150k orders table flat at
 # 86M pairs, turning a 23 s build into 255 s of shuffle-bound sort; see
-# BASELINE.md round 5.)  0 always refines.
+# BASELINE.md round 5.)  k=1 settlements aggregate map-side (min-struct,
+# no window sort) and get 20x this budget.  0 always refines.
 FLAT_RING_CANDIDATES = 10_000_000
-
-# k=1 settlements aggregate map-side (min-struct, no window sort), so
-# their callers raise the flat budget; capped at 20x the one above.
-FLAT_RING_CANDIDATES_K1 = 200_000_000
 
 
 def fits(size: int, limit: int) -> bool:

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from esda_spark.operators import gate
+from esda_spark.plans.checkpoint import persisted_rdd_ids, unpersist_rdds
 
 _TOPK_SCHEMA = "query_id long, vec_id long, rank int, sim double"
 
@@ -440,21 +441,28 @@ def _lsh_topk_incore(emb_pdf, q_pdf, dim, k, num_planes, seed,
 
 def _collect_sides(embeddings, queries, id_col, vec_col, query_id_col):
     """(corpus (vec_id, cv), queries (query_id, qv)) as driver frames
-    when each side fits ``gate.ANN_INCORE_ROWS``, else None.  The
-    corpus goes first: above the gate that costs one count job."""
-    emb_pdf = gate.collect_within(
-        embeddings.select(F.col(id_col).alias("vec_id"),
-                          F.col(vec_col).alias("cv")),
-        gate.ANN_INCORE_ROWS,
-    )
-    if emb_pdf is None:
+    when each side fits ``gate.ANN_INCORE_ROWS``, else None.  Both
+    sides are counted before either is collected, so a side over the
+    gate costs count jobs only."""
+    limit = gate.ANN_INCORE_ROWS
+    if limit <= 0:
         return None
-    q_pdf = gate.collect_within(
-        queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(vec_col).alias("qv")),
-        gate.ANN_INCORE_ROWS,
+    ne = embeddings.count()
+    if ne > limit:
+        return None
+    nq = queries.count()
+    if nq > limit:
+        return None
+    return (
+        gate.collect_within(
+            embeddings.select(F.col(id_col).alias("vec_id"),
+                              F.col(vec_col).alias("cv")),
+            limit, size=ne),
+        gate.collect_within(
+            queries.select(F.col(query_id_col).alias("query_id"),
+                           F.col(vec_col).alias("qv")),
+            limit, size=nq),
     )
-    return None if q_pdf is None else (emb_pdf, q_pdf)
 
 
 def lsh_topk(
@@ -994,7 +1002,7 @@ def near_dup_groups(
             )
         )
 
-    if mode == "lsh":
+    if mode == "lsh" and gate.DEDUP_INCORE_PAIRS > 0:
         # in-core fast path (components-operator precedent): bucket
         # candidates are id pairs only (one signature materialization,
         # no embedding arrays through the self-join); the exact cosine
@@ -1003,6 +1011,8 @@ def near_dup_groups(
         e = embeddings.select(F.col(id_col).alias("vec_id"),
                               F.col(vec_col))
         d = dim or len(e.select(vec_col).first()[0])
+        sc = spark.sparkContext
+        pids_before = persisted_rdd_ids(sc)
         sig = hyperplane_signatures(
             e, d, num_planes, seed, "vec_id", vec_col, num_tables
         ).localCheckpoint(eager=True)
@@ -1010,18 +1020,20 @@ def near_dup_groups(
         b = sig.select(F.col("vec_id").alias("vec_b"), "table", "bucket")
         # raw bucket-pair rows (dups deduped driver-side — cheaper
         # than a distinct exchange; the gate bounds the collect at
-        # num_tables x distinct pairs), checkpointed lazily so the
-        # gate's count materializes the join once and the collect
-        # reads those rows
-        cand = (
+        # num_tables x distinct pairs).  Sized without the self-join:
+        # sum C(n_b, 2) over the (table, bucket) counts (an upper
+        # bound if ids repeat), so above the gate the join never runs.
+        n_raw = sig.groupBy("table", "bucket").count().agg(
+            F.sum(F.col("count") * (F.col("count") - 1) / 2)
+        ).first()[0]
+        cand_pdf = gate.collect_within(
             a.join(b, ["table", "bucket"])
             .where(F.col("vec_a") < F.col("vec_b"))
-            .select("vec_a", "vec_b")
-            .localCheckpoint(eager=False)
+            .select("vec_a", "vec_b"),
+            gate.DEDUP_INCORE_PAIRS * num_tables,
+            size=int(n_raw or 0),
         )
-        cand_pdf = gate.collect_within(
-            cand, gate.DEDUP_INCORE_PAIRS * num_tables
-        )
+        unpersist_rdds(sc, persisted_rdd_ids(sc) - pids_before)
         if cand_pdf is not None:
             ids = embeddings.select(F.col(id_col).alias("vec_id"))
             if len(cand_pdf) == 0:

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from esda_spark.operators import gate
 from esda_spark.plans.cells import pack_cell, with_cell
+from esda_spark.plans.checkpoint import persisted_rdd_ids
 
 
 def _poly_cells(polygons: DataFrame, cell_size: float) -> DataFrame:
@@ -213,14 +214,12 @@ def knn_join(
         )
     else:
         sc = left.sparkSession.sparkContext
-        pids_before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+        pids_before = persisted_rdd_ids(sc)
         if cell_size is None:
             cell_size = _estimate_cell_size(rpts, k)
         levels = _density_levels(lpts, rpts, cell_size,
                                  density_threshold=max(4 * k, 32),
-                                 max_levels=12,
-                                 flat_budget=(gate.FLAT_RING_CANDIDATES_K1
-                                              if k == 1 else None))
+                                 max_levels=12, k1=k == 1)
         edges = _knn_rounds_multi(
             levels, rpts, k, cell_size, binary=True, max_rounds=12,
             pids_before=pids_before, exclude_self=False, keep_d2=True,

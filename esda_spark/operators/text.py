@@ -387,8 +387,11 @@ def minhash_dedup_groups(
         connected_components,
         incore_components_arrays,
     )
+    from esda_spark.plans.checkpoint import persisted_rdd_ids, unpersist_rdds
 
     spark = docs.sparkSession
+    sc = spark.sparkContext
+    pids_before = persisted_rdd_ids(sc)
     # the banding self-join references the signature pipeline on BOTH
     # sides (different output aliases defeat exchange reuse), so the
     # 16-way h60 signature pass would run twice — materialize it once
@@ -410,6 +413,8 @@ def minhash_dedup_groups(
     # and only the final per-doc broadcast join stays distributed.
     cand_pdf = gate.collect_within(cand, gate.DEDUP_INCORE_PAIRS)
     if cand_pdf is not None:
+        # the driver path never reads the checkpoints again: free them
+        unpersist_rdds(sc, persisted_rdd_ids(sc) - pids_before)
         ids = docs.select(F.col(id_col).alias("doc_id"))
         if len(cand_pdf) == 0:
             return ids.select(

@@ -47,6 +47,7 @@ from esda_spark.plans.cells import (
     expand_ring_col,
     with_cell,
 )
+from esda_spark.plans.checkpoint import persisted_rdd_ids, unpersist_rdds
 
 EDGE_COLS = ("focal", "neighbor", "weight")
 
@@ -107,7 +108,7 @@ def knn_edges(
     # creates, so every intermediate block (quadtree labels, per-round
     # checkpoints) can be freed deterministically at the end
     _sc = points.sparkSession.sparkContext
-    pids_before = set(_sc._jsc.getPersistentRDDs().keySet().toArray())
+    pids_before = persisted_rdd_ids(_sc)
     if cell_size is None:
         cell_size = _estimate_cell_size(points, k)
     if density_threshold is None:
@@ -118,7 +119,7 @@ def knn_edges(
 
     levels = _density_levels(
         base, base, cell_size, density_threshold, max_levels,
-        flat_budget=gate.FLAT_RING_CANDIDATES_K1 if k == 1 else None)
+        k1=k == 1)
     return _knn_rounds_multi(levels, base, k, cell_size, binary,
                              max_rounds, pids_before, keep_d2=keep_d2)
 
@@ -129,7 +130,7 @@ def _density_levels(
     cell_size: float,
     density_threshold: int,
     max_levels: int,
-    flat_budget: int | None = None,
+    k1: bool = False,
 ) -> list[tuple[int, DataFrame]]:
     """Quadtree density-level assignment: split ``focals`` into
     (level, frame) classes so that, at each focal's level, a
@@ -177,13 +178,11 @@ def _density_levels(
     # not points) ring self-join.
     same_side = focals is density_src
     n_foc = n_src if same_side else focals.count()
-    # k=1 callers raise the budget: their settlement is the map-side
-    # min-struct aggregate, so candidates are combined before the
-    # exchange and never flow through a window sort.  A zero module
+    # k=1 callers (``k1``) raise the budget 20x: their settlement is
+    # the map-side min-struct aggregate, so candidates are combined
+    # before the exchange and never flow through a window sort.  A zero
     # budget still disables the gate outright (always refine).
-    flat = gate.FLAT_RING_CANDIDATES
-    budget = (flat if flat_budget is None
-              else min(flat_budget, max(flat, 1) * 20) if flat else 0)
+    budget = gate.FLAT_RING_CANDIDATES * (20 if k1 else 1)
     if 9 * n_foc * max0 > budget:
         cx, cy = unpack_cell(F.col("_c"))
         cgrid = counts0.select(
@@ -354,11 +353,8 @@ def _knn_rounds_multi(
 
     sc = all_points.sparkSession.sparkContext
 
-    def _pids() -> set:
-        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
-
     if pids_before is None:
-        pids_before = _pids()
+        pids_before = persisted_rdd_ids(sc)
     guard_size = F.lit(cell_size) / F.pow(F.lit(2.0), F.col("lvl"))
     # checkpoint the focal union once (lazily — round 1's count
     # materializes it): every round's candidate join and the
@@ -495,14 +491,10 @@ def _knn_rounds_multi(
     # cache block this build created (they otherwise accumulate across
     # builds in one session and degrade later jobs): diff the persistent
     # RDD ids around the build and keep only the output's own blocks
-    pids_mid = _pids()
+    pids_mid = persisted_rdd_ids(sc)
     out = out.localCheckpoint(eager=True)
-    keep = _pids() - pids_mid
-    jmap = sc._jsc.getPersistentRDDs()
-    for rid in (pids_mid - pids_before) - keep:
-        jr = jmap.get(rid)
-        if jr is not None:
-            jr.unpersist()
+    keep = persisted_rdd_ids(sc) - pids_mid
+    unpersist_rdds(sc, (pids_mid - pids_before) - keep)
     return out
 
 

@@ -20,6 +20,22 @@ from pyspark.sql import functions as F
 MANIFEST = "_manifest.json"
 
 
+def persisted_rdd_ids(sc) -> set:
+    """Ids of the RDDs ``sc`` holds persisted (cache or local checkpoint)."""
+    return set(sc._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def unpersist_rdds(sc, ids) -> None:
+    """Free the blocks of the persisted RDDs in ``ids`` -- typically
+    ``persisted_rdd_ids(sc) - before``: what a build materialized after
+    a ``before`` snapshot and its output no longer reads."""
+    jmap = sc._jsc.getPersistentRDDs()
+    for rid in ids:
+        jr = jmap.get(rid)
+        if jr is not None:
+            jr.unpersist()
+
+
 def write_stage(
     df: DataFrame, path: str, fingerprint: str, partition_by: list[str] | None = None
 ) -> dict:

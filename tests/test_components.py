@@ -83,6 +83,9 @@ def test_components_deterministic_and_empty(spark, monkeypatch):
 
     empty = spark.createDataFrame([], "focal long, neighbor long")
     assert connected_components(empty).count() == 0
+    # the per-call override (bench.py's distributed smoke passes 0)
+    # and the module budget both force the distributed path
+    assert connected_components(empty, incore_max_edges=0).count() == 0
     monkeypatch.setattr(gate, "CC_INCORE_EDGES", 0)
     assert connected_components(empty).count() == 0
 

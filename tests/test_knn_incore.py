@@ -148,6 +148,38 @@ def test_near_dup_groups_incore_vs_distributed(spark, monkeypatch):
     assert {tuple(r) for r in fast} == {tuple(r) for r in dist}
 
 
+def test_near_dup_groups_above_a_nonzero_gate(spark, monkeypatch):
+    """A small nonzero budget sends the gate's size (the bucket-pair
+    count from the signatures) above the limit: the distributed path
+    runs through the gate, not around it, and agrees with the driver."""
+    from esda_spark.operators.similarity import near_dup_groups
+
+    rng = np.random.default_rng(9)
+    base = rng.normal(size=(30, 16))
+    vecs = np.vstack([base, base + 0.001 * rng.normal(size=(30, 16))])
+    emb = spark.createDataFrame(
+        [(int(i), [float(v) for v in row]) for i, row in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    kw = dict(threshold=0.99, mode="lsh", num_planes=4, num_tables=4)
+    fast = {tuple(r) for r in near_dup_groups(emb, **kw).collect()}
+    seen = []
+    collect_within = gate.collect_within
+
+    def spy(df, limit, size=None):
+        out = collect_within(df, limit, size)
+        seen.append((limit, size, out is None))
+        return out
+
+    monkeypatch.setattr(gate, "collect_within", spy)
+    monkeypatch.setattr(gate, "DEDUP_INCORE_PAIRS", 1)
+    dist = {tuple(r) for r in near_dup_groups(emb, **kw).collect()}
+    # 30 planted pairs collide in all 4 tables: >= 120 raw bucket pairs
+    assert seen[0][0] == 4 and seen[0][1] >= 120 and seen[0][2]
+    assert dist == fast
+    assert sum(1 for _, g, c in fast if c == 0) == 30
+
+
 def _emb_fixture(spark, n=400, dim=16, seed=4):
     rng = np.random.default_rng(seed)
     V = rng.normal(size=(n, dim))

@@ -149,7 +149,7 @@ def test_knn_flat_gate_parity_on_skewed_points(spark, monkeypatch):
 def test_knn_flat_gate_budget_is_k_aware(spark, monkeypatch):
     # the flat gate's budget reflects what the settlement can absorb:
     # k>1 rows flow through a window sort (small budget), k=1 callers
-    # aggregate map-side and pass a raised flat_budget.  Fixture volume
+    # aggregate map-side and get a raised budget (k1).  Fixture volume
     # ~165k ring pairs sits between the two.
     from esda_spark.operators import gate
     from esda_spark.operators import weights as W
@@ -167,13 +167,10 @@ def test_knn_flat_gate_budget_is_k_aware(spark, monkeypatch):
     # default (k>1 window-sort) budget: volume exceeds it -> refine
     levels = W._density_levels(base, base, cs, 32, 12)
     assert [lv for lv, _ in levels] != [0], "should refine above budget"
-    # k=1-style caller: raised flat_budget (capped at 20x the module
-    # default) absorbs the same volume -> flat
-    levels1 = W._density_levels(base, base, cs, 32, 12,
-                                flat_budget=gate.FLAT_RING_CANDIDATES_K1)
+    # k=1 caller: the 20x budget absorbs the same volume -> flat
+    levels1 = W._density_levels(base, base, cs, 32, 12, k1=True)
     assert [lv for lv, _ in levels1] == [0], "k=1 budget should stay flat"
-    # a zero module budget wins over any explicit flat_budget
+    # a zero budget refines k=1 callers too
     monkeypatch.setattr(gate, "FLAT_RING_CANDIDATES", 0)
-    levels0 = W._density_levels(base, base, cs, 32, 12,
-                                flat_budget=gate.FLAT_RING_CANDIDATES_K1)
+    levels0 = W._density_levels(base, base, cs, 32, 12, k1=True)
     assert [lv for lv, _ in levels0] != [0], "budget 0 must always refine"
