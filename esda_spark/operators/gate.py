@@ -26,8 +26,9 @@ from pyspark.sql import DataFrame
 # side streams at any size.
 KNN_INCORE_TARGETS = 2_000_000
 
-# cosine_topk / lsh_topk / ivf_topk: corpus and query rows for the
-# driver-side top-k (both sides collected; ~100 MB of float64).
+# cosine_topk / lsh_topk / ivf_topk: corpus rows scored on the driver
+# (~100 MB of float64); above it the corpus streams through one
+# mapInPandas.  The query side is always collected and broadcast.
 ANN_INCORE_ROWS = 200_000
 
 # cosine_topk scores the whole (queries x corpus) matrix at once on the

@@ -311,8 +311,9 @@ def knn_edges_incore(
                 pdf["y"].to_numpy(np.float64),
                 idx_, kk, excl, gdiv,
             )
-            w = (np.ones(len(f)) if is_binary
-                 else 1.0 / np.sqrt(d2))
+            with np.errstate(divide="ignore"):  # coincident: inf
+                w = (np.ones(len(f)) if is_binary
+                     else 1.0 / np.sqrt(d2))
             res = {"focal": f, "neighbor": n, "weight": w}
             if want_d2:
                 res["d2"] = d2

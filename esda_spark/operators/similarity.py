@@ -1,19 +1,33 @@
 """Similarity search over embedding columns (array<float>).
 
-- :func:`cosine_topk` — brute-force exact top-k: broadcast the query
-  block, JVM-side ``zip_with``/``aggregate`` dot products (sequential
-  fold => deterministic), per-query ``row_number`` top-k.  The
-  baseline every ANN variant is validated against.
-- :func:`lsh_topk` — random-hyperplane LSH bucketing as the scale
-  path: queries only score candidates sharing a signature-prefix
-  bucket, trading recall for a ~buckets-fold scan reduction.  The
-  hyperplanes derive from a seeded numpy RNG broadcast to a pandas
-  UDF (Arrow-batched).
+Every ANN top-k operator scores with one numpy kernel.  The query side
+is collected once and broadcast; the corpus goes through
+``gate.collect_within(corpus, gate.ANN_INCORE_ROWS)`` and is scored on
+the driver below the gate, or streamed through one ``mapInPandas``
+above it (no join).  Both paths apply one ranking, (sim desc, vec_id
+asc) with the self-match dropped.
+
+- :func:`cosine_topk` — exact top-k (:func:`_dense_topk`: one BLAS
+  block per corpus batch).  The baseline every ANN variant is
+  validated against; :func:`cosine_topk_distributed` runs the same
+  kernel with both sides distributed.
+- :func:`lsh_topk` — random-hyperplane LSH: a query scores only the
+  corpus rows sharing one of its probe buckets
+  (:func:`_candidate_topk`), trading recall for a ~buckets-fold scan
+  reduction.
+- :func:`ivf_topk` — inverted lists over :func:`kmeans_fit`
+  centroids, the same candidate kernel keyed by list id.
+- :func:`embedding_near_dup_pairs` / :func:`near_dup_groups` —
+  threshold pairs and their transitive groups.
+
+Vectors are normalized by :func:`_unit`, whose norm floor maps a zero
+vector to zero: its cosine with anything is 0 on every path.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -24,8 +38,11 @@ from esda_spark.operators import gate
 from esda_spark.plans.checkpoint import persisted_rdd_ids, unpersist_rdds
 
 _TOPK_SCHEMA = "query_id long, vec_id long, rank int, sim double"
+_CAND_SCHEMA = "query_id long, vec_id long, sim double"
 
 
+# Catalyst dot product and norm: only the exact near-dup lane uses them
+# (its DuckDB oracle compares rounded sims, see PLANS.md "ANN kernels").
 def _dot(a, b):
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -44,35 +61,205 @@ def _norm(a):
     )
 
 
-def _topk_with_ties(sims: np.ndarray, vec_ids: np.ndarray, kk: int) -> list:
-    """Per-row column indices of the top-``kk`` by (sim desc, vec_id asc).
+def _matrix(col: pd.Series) -> np.ndarray:
+    """A pandas column of vectors as a float64 (rows, dim) matrix."""
+    return np.vstack(col.to_numpy()).astype(np.float64)
+
+
+def _unit(X: np.ndarray) -> np.ndarray:
+    """Rows of ``X`` scaled to unit L2 norm.  The 1e-12 norm floor maps
+    a zero row to zero.  Each row's norm depends on that row only, so a
+    vector normalizes bitwise-identically in any batch."""
+    return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+
+
+def _pair_dot(A: np.ndarray, B: np.ndarray,
+              ai: np.ndarray | None = None,
+              bi: np.ndarray | None = None) -> np.ndarray:
+    """Row-wise dot products ``A[ai] . B[bi]`` by a left-to-right
+    accumulation over the columns.  Each product depends on its two
+    rows only, so the driver and every ``mapInPandas`` batch compute
+    bitwise-equal sims.  The optional row gathers are applied PER
+    COLUMN so the working set stays (n,)-sized: a (n, dim) gather
+    allocated ~100 MB of fresh pages per call, which in the long-lived
+    driver process measured 20-30x the standalone cost (allocator /
+    page-fault churn, CPU time == wall)."""
+    a0 = A[ai, 0] if ai is not None else A[:, 0]
+    b0 = B[bi, 0] if bi is not None else B[:, 0]
+    acc = a0 * b0
+    for j in range(1, A.shape[1]):
+        aj = A[ai, j] if ai is not None else A[:, j]
+        bj = B[bi, j] if bi is not None else B[:, j]
+        acc += aj * bj
+    return acc
+
+
+def _topk_with_ties(sims: np.ndarray, vec_ids: np.ndarray,
+                    kk: int) -> np.ndarray:
+    """(rows, kk) column indices of each row's top-``kk`` by (sim desc,
+    vec_id asc).
 
     Plain ``argpartition`` keeps an arbitrary subset when more than kk
     entries tie exactly at the cutoff sim, so the lowest-vec_id tie the
-    final global window would select can be dropped — and in the
-    bucketed kernel that makes results depend on ``n_buckets``.  Rows
-    with no tie at the cutoff (the generic case) stay on the pure
-    argpartition path; only tied rows pay the vec_id-ordered widening.
+    final ranking would select can be dropped — and in the bucketed
+    kernel that makes results depend on ``n_buckets``.  Rows with no tie
+    at the cutoff (the generic case) stay on the pure argpartition path;
+    only tied rows pay the vec_id-ordered widening.
     """
     m, n = sims.shape
     if n <= kk:
-        return [np.arange(n)] * m
+        return np.broadcast_to(np.arange(n), (m, n))
     part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
     kept = np.take_along_axis(sims, part, axis=1)
     thresh = kept.min(axis=1)
     tied_total = (sims == thresh[:, None]).sum(axis=1)
     tied_kept = (kept == thresh[:, None]).sum(axis=1)
-    out = list(part)
     for qi in np.nonzero(tied_total > tied_kept)[0]:
         row = sims[qi]
         cols = part[qi]
         greater = cols[row[cols] > thresh[qi]]
         tied_all = np.nonzero(row == thresh[qi])[0]
         order = np.argsort(vec_ids[tied_all], kind="stable")
-        out[qi] = np.concatenate(
+        part[qi] = np.concatenate(
             [greater, tied_all[order[: kk - len(greater)]]]
         )
-    return out
+    return part
+
+
+def _first_k(group: np.ndarray, vec_ids: np.ndarray, sims: np.ndarray,
+             k: int) -> tuple[np.ndarray, np.ndarray]:
+    """(indices, 1-based ranks) of the first ``k`` entries of each
+    ``group`` under (sim desc, vec_id asc), ordered by group then rank."""
+    order = np.lexsort((vec_ids, -sims, group))
+    g = group[order]
+    starts = np.nonzero(np.r_[True, g[1:] != g[:-1]])[0]
+    rank = (np.arange(len(g))
+            - np.repeat(starts, np.diff(np.r_[starts, len(g)])) + 1)
+    keep = rank <= k
+    return order[keep], rank[keep]
+
+
+def _rank(cand: pd.DataFrame, k: int) -> pd.DataFrame:
+    """The driver-side ranking: per-query top-``k`` of kernel output
+    (query_id, vec_id, sim) by (sim desc, vec_id asc), self-match
+    dropped.  :func:`_window_rank` is the same ranking in Spark."""
+    q = cand["query_id"].to_numpy(np.int64)
+    v = cand["vec_id"].to_numpy(np.int64)
+    s = cand["sim"].to_numpy(np.float64)
+    keep = q != v
+    q, v, s = q[keep], v[keep], s[keep]
+    sel, rank = _first_k(q, v, s, k)
+    return pd.DataFrame({"query_id": q[sel], "vec_id": v[sel],
+                         "rank": rank.astype(np.int32), "sim": s[sel]})
+
+
+def _window_rank(scored: DataFrame, k: int) -> DataFrame:
+    """:func:`_rank` over a distributed (query_id, vec_id, sim) frame."""
+    win = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
+    return (
+        scored.where(F.col("query_id") != F.col("vec_id"))
+        .withColumn("rank", F.row_number().over(win))
+        .where(F.col("rank") <= k)
+        .select("query_id", "vec_id", "rank", "sim")
+    )
+
+
+def _dense_topk(pdf: pd.DataFrame, qids: np.ndarray, Qu: np.ndarray, *,
+                k: int) -> pd.DataFrame:
+    """Exact cosine kernel: one BLAS (queries x block) score matrix over
+    the corpus block ``pdf`` (vec_id, cv), local top-(k+1) per query (+1
+    survives the self-match drop).  ``Qu`` holds the unit query rows."""
+    cids = pdf["vec_id"].to_numpy(np.int64)
+    sims = Qu @ _unit(_matrix(pdf["cv"])).T
+    cols = _topk_with_ties(sims, cids, min(k + 1, len(cids)))
+    rows = np.repeat(np.arange(len(qids)), cols.shape[1])
+    cols = cols.ravel()
+    return pd.DataFrame({"query_id": qids[rows], "vec_id": cids[cols],
+                         "sim": sims[rows, cols]})
+
+
+def _candidate_topk(pdf: pd.DataFrame, qids: np.ndarray, Qu: np.ndarray,
+                    probes: np.ndarray, *, keys, k: int) -> pd.DataFrame:
+    """Approximate kernel over the corpus block ``pdf`` (vec_id, cv):
+    query ``i`` scores the rows whose key is one of ``probes[i]``.
+    ``keys(X)`` gives each raw row its (rows, tables) keys; a row
+    reached through several tables is scored once.  Sims are
+    :func:`_pair_dot` on unit rows; local top-(k+1) per query."""
+    cids = pdf["vec_id"].to_numpy(np.int64)
+    X = _matrix(pdf["cv"])
+    ck = keys(X)
+    order = np.argsort(ck.ravel(), kind="stable")
+    sk = ck.ravel()[order]
+    lo = np.searchsorted(sk, probes.ravel())
+    cnt = np.searchsorted(sk, probes.ravel(), side="right") - lo
+    pos = np.repeat(lo - np.cumsum(cnt) + cnt, cnt) + np.arange(cnt.sum())
+    qrow = np.repeat(np.arange(probes.size) // probes.shape[1], cnt)
+    n = len(cids)
+    pair = np.unique(qrow * n + order[pos] // ck.shape[1])
+    qrow, crow = pair // n, pair % n
+    sim = _pair_dot(Qu, _unit(X), qrow, crow)
+    sel, _ = _first_k(qrow, cids[crow], sim, k + 1)
+    return pd.DataFrame({"query_id": qids[qrow[sel]],
+                         "vec_id": cids[crow[sel]], "sim": sim[sel]})
+
+
+def _gated_topk(corpus: DataFrame, cpdf: pd.DataFrame | None, kernel,
+                qside: tuple, k: int) -> DataFrame:
+    """Top-``k`` of ``kernel(block, *qside)`` over ``corpus`` (vec_id,
+    cv): on the driver when the gate collected it (``cpdf``), else in
+    one ``mapInPandas`` with ``qside`` broadcast."""
+    spark = corpus.sparkSession
+    if cpdf is not None:
+        if len(cpdf) == 0:
+            return spark.createDataFrame([], _TOPK_SCHEMA)
+        return spark.createDataFrame(_rank(kernel(cpdf, *qside), k),
+                                     _TOPK_SCHEMA)
+    bc = spark.sparkContext.broadcast(qside)
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        q = bc.value
+        for pdf in batches:
+            if len(pdf):
+                yield kernel(pdf, *q)
+
+    return _window_rank(corpus.mapInPandas(score, _CAND_SCHEMA), k)
+
+
+def _cogroup_topk(corpus: DataFrame, queries: DataFrame, key: str,
+                  k: int) -> DataFrame:
+    """Exact top-``k`` with both sides distributed: each ``key`` group
+    of the corpus (vec_id, cv) cogroups with the queries (query_id, qv)
+    carrying that key and runs :func:`_dense_topk`."""
+
+    def score(_, cpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
+        if len(cpdf) == 0 or len(qpdf) == 0:
+            return pd.DataFrame({"query_id": [], "vec_id": [], "sim": []})
+        return _dense_topk(cpdf, qpdf["query_id"].to_numpy(np.int64),
+                           _unit(_matrix(qpdf["qv"])), k=k)
+
+    return _window_rank(
+        corpus.groupBy(key).cogroup(queries.groupBy(key))
+        .applyInPandas(score, schema=_CAND_SCHEMA),
+        k,
+    )
+
+
+def _corpus(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return embeddings.select(F.col(id_col).alias("vec_id"),
+                             F.col(vec_col).alias("cv"))
+
+
+def _queries(queries: DataFrame, query_id_col: str,
+             vec_col: str) -> DataFrame:
+    return queries.select(F.col(query_id_col).alias("query_id"),
+                          F.col(vec_col).alias("qv"))
+
+
+def _query_arrays(qpdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(query ids, raw float64 query matrix) of a collected query side;
+    the matrix is None when there are no queries."""
+    qids = qpdf["query_id"].to_numpy(np.int64)
+    return qids, _matrix(qpdf["qv"]) if len(qids) else None
 
 
 def cosine_topk(
@@ -82,161 +269,36 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    arrow: bool = True,
 ) -> DataFrame:
     """(query_id, vec_id, rank, sim): exact cosine top-k per query.
 
-    Default path: broadcast the query matrix to an Arrow kernel; each
-    corpus partition computes one BLAS (queries x rows) score matrix
-    and emits only its local top-k per query, so the shuffle carries
-    O(partitions * q * k) rows — the map-side-combine shape that holds
-    at corpus sizes where the naive crossJoin's q*n rows would not.
-    ``arrow=False`` keeps the pure-Catalyst higher-order-function
-    formulation (the SQL-oracle-comparable reference path).
+    The query matrix is collected and normalized once.  When the corpus
+    fits ``gate.ANN_INCORE_ROWS`` (and the (queries x corpus) score
+    matrix ``gate.ANN_INCORE_SCORES``) it is scored on the driver;
+    otherwise each corpus partition streams through one ``mapInPandas``
+    with the query matrix broadcast.  Either way the kernel is
+    :func:`_dense_topk`: one BLAS score matrix per block and only its
+    local top-(k+1) per query out, so the ranking window sees
+    O(partitions * q * k) rows, never the naive crossJoin's q * n.
 
-    Bound: the QUERY side is collected to the driver and broadcast
-    (q * dim * 8 bytes — ~1 GB at q=1e6, dim=128), so this operator is
-    for validation and moderate query batches.  A large-q workload
-    should go through :func:`lsh_topk` (both sides stay distributed;
-    only bucket-mates are scored).
+    Bound: the QUERY side is collected and broadcast (q * dim * 8 bytes
+    — ~1 GB at q=1e6, dim=128), as it is in :func:`lsh_topk` and
+    :func:`ivf_topk` ``mode="broadcast"``.  A large-q workload should
+    go through :func:`cosine_topk_distributed` or :func:`ivf_topk`
+    ``mode="cogroup"``, which keep both sides distributed.
     """
-    if not arrow:
-        q = F.broadcast(
-            queries.select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(vec_col).alias("qv"),
-            )
-        )
-        c = embeddings.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")
-        )
-        scored = q.crossJoin(c).where(
-            F.col("query_id") != F.col("vec_id")
-        ).select(
-            "query_id",
-            "vec_id",
-            (_dot(F.col("qv"), F.col("cv"))
-             / (_norm(F.col("qv")) * _norm(F.col("cv")))).alias("sim"),
-        )
-        win = Window.partitionBy("query_id").orderBy(
-            F.desc("sim"), F.asc("vec_id")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(win))
-            .where(F.col("rank") <= k)
-            .select("query_id", "vec_id", "rank", "sim")
-        )
-
     spark = embeddings.sparkSession
-    qrows = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    ).collect()
-    if not qrows:
+    qids, Q = _query_arrays(_queries(queries, query_id_col,
+                                     vec_col).toPandas())
+    if len(qids) == 0:
         return spark.createDataFrame([], _TOPK_SCHEMA)
-    qids = np.array([r.query_id for r in qrows], dtype=np.int64)
-    Q = np.array([np.asarray(r.qv, dtype=np.float64) for r in qrows])
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    # in-core fast path (round 6): the query side is collected either
-    # way; when the corpus also fits the gate (and the (q, n) score
-    # matrix its own budget), score the single BLAS matrix on the
-    # driver — same normalize, same dgemm library, same (sim desc,
-    # vec_id asc) ranking — instead of a Python-worker stage plus a
-    # window merge.
-    emb_pdf = gate.collect_within(
-        embeddings.select(F.col(id_col).alias("vec_id"),
-                          F.col(vec_col).alias("cv")),
+    corpus = _corpus(embeddings, id_col, vec_col)
+    cpdf = gate.collect_within(
+        corpus,
         min(gate.ANN_INCORE_ROWS, gate.ANN_INCORE_SCORES // len(qids)),
     )
-    if emb_pdf is not None:
-        if len(emb_pdf) == 0:
-            return spark.createDataFrame([], _TOPK_SCHEMA)
-        cid = emb_pdf["vec_id"].to_numpy(np.int64)
-        C = np.vstack(emb_pdf["cv"].to_numpy()).astype(np.float64)
-        C /= np.linalg.norm(C, axis=1, keepdims=True)
-        sims = Qn @ C.T
-        qrow = np.repeat(np.arange(len(qids)), len(cid))
-        crow = np.tile(np.arange(len(cid)), len(qids))
-        keep = qids[qrow] != cid[crow]
-        qrow, crow = qrow[keep], crow[keep]
-        sim = sims[qrow, crow]
-        order = np.lexsort((cid[crow], -sim, qids[qrow]))
-        qs = qids[qrow][order]
-        starts = np.nonzero(np.r_[True, qs[1:] != qs[:-1]])[0]
-        seg_len = np.diff(np.r_[starts, len(qs)])
-        rank = np.arange(len(qs)) - np.repeat(starts, seg_len) + 1
-        sel = order[rank <= k]
-        out = pd.DataFrame({
-            "query_id": qids[qrow][sel], "vec_id": cid[crow][sel],
-            "rank": rank[rank <= k].astype(np.int32),
-            "sim": sim[sel],
-        })
-        return spark.createDataFrame(out, _TOPK_SCHEMA)
-    bc = spark.sparkContext.broadcast((qids, Qn))
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, Qn_ = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.vstack(pdf[id_col + "_v"].to_numpy()).astype(np.float64)
-            C /= np.linalg.norm(C, axis=1, keepdims=True)
-            sims = Qn_ @ C.T                     # (q, rows)
-            vec_ids = pdf["vid"].to_numpy(np.int64)
-            kk = min(k + 1, sims.shape[1])       # +1 to survive self-drop
-            part = _topk_with_ties(sims, vec_ids, kk)
-            out_q, out_v, out_s = [], [], []
-            for qi in range(len(qids_)):
-                cols = part[qi]
-                out_q.extend([qids_[qi]] * len(cols))
-                out_v.extend(vec_ids[cols])
-                out_s.extend(sims[qi, cols])
-            yield pd.DataFrame(
-                {"query_id": out_q, "vec_id": out_v, "sim": out_s}
-            )
-
-    prepared = embeddings.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias(id_col + "_v")
-    )
-    scored = prepared.mapInPandas(
-        score, schema="query_id long, vec_id long, sim double"
-    ).where(F.col("query_id") != F.col("vec_id"))
-    win = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "sim")
-    )
-
-
-def _blas_topk_scorer(kk_keep: int):
-    """Cogroup kernel shared by :func:`cosine_topk_distributed` and
-    :func:`ivf_topk`'s cogroup posture: one BLAS (queries x corpus
-    slice) score matrix per group, local top-``kk_keep`` per query with
-    the (sim desc, vec_id asc) tie-break the final window applies."""
-
-    def score(key, cpdf: "pd.DataFrame", qpdf: "pd.DataFrame"):
-        if len(cpdf) == 0 or len(qpdf) == 0:
-            return pd.DataFrame({"query_id": [], "vec_id": [], "sim": []})
-        C = np.vstack(cpdf["cv"].to_numpy()).astype(np.float64)
-        C /= np.linalg.norm(C, axis=1, keepdims=True)
-        Q = np.vstack(qpdf["qv"].to_numpy()).astype(np.float64)
-        Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-        sims = Q @ C.T
-        vec_ids = cpdf["vec_id"].to_numpy(np.int64)
-        qids = qpdf["query_id"].to_numpy(np.int64)
-        kk = min(kk_keep, sims.shape[1])
-        part = _topk_with_ties(sims, vec_ids, kk)
-        out_q, out_v, out_s = [], [], []
-        for qi in range(len(qids)):
-            cols = part[qi]
-            out_q.extend([qids[qi]] * len(cols))
-            out_v.extend(vec_ids[cols])
-            out_s.extend(sims[qi, cols])
-        return pd.DataFrame(
-            {"query_id": out_q, "vec_id": out_v, "sim": out_s}
-        )
-
-    return score
+    return _gated_topk(corpus, cpdf, partial(_dense_topk, k=k),
+                       (qids, _unit(Q)), k)
 
 
 def cosine_topk_distributed(
@@ -262,33 +324,37 @@ def cosine_topk_distributed(
     final per-query window merges bucket winners (n_buckets * q * (k+1)
     rows).  No driver-side collect of either side at any point; total
     flops identical to the broadcast path.  Results are exactly
-    :func:`cosine_topk`'s (same float64 kernel, same (sim desc, vec_id)
+    :func:`cosine_topk`'s (same kernel, same (sim desc, vec_id)
     tie-break).
     """
     spark = embeddings.sparkSession
     nb = int(n_buckets or spark.sparkContext.defaultParallelism)
-    score = _blas_topk_scorer(k + 1)  # +1 survives the self-match drop
-    corp = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(nb)).cast("int").alias("cb"),
-    )
+    corp = _corpus(embeddings, id_col, vec_col).withColumn(
+        "cb", F.pmod(F.xxhash64(F.col("vec_id")), F.lit(nb)).cast("int"))
     buckets = spark.range(nb).select(F.col("id").cast("int").alias("cb"))
-    qrep = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    ).crossJoin(F.broadcast(buckets))
+    qrep = _queries(queries, query_id_col, vec_col).crossJoin(
+        F.broadcast(buckets))
+    return _cogroup_topk(corp, qrep, "cb", k)
 
-    scored = (
-        corp.groupBy("cb")
-        .cogroup(qrep.groupBy("cb"))
-        .applyInPandas(score, schema="query_id long, vec_id long, sim double")
-        .where(F.col("query_id") != F.col("vec_id"))
-    )
-    win = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "sim")
-    )
+
+def _planes(seed: int, num_tables: int, num_planes: int,
+            dim: int) -> np.ndarray:
+    """(tables, planes, dim) seeded random hyperplanes."""
+    return np.random.default_rng(seed).normal(
+        size=(num_tables, num_planes, dim))
+
+
+def _buckets(X: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """(rows, tables) bucket ids: bit j of table t is the sign of the
+    projection on ``planes[t, j]``."""
+    pows = (1 << np.arange(planes.shape[1])).astype(np.int64)
+    return np.stack([((X @ H.T) > 0) @ pows for H in planes], axis=1)
+
+
+def _lsh_keys(X: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """(rows, tables) bucket ids made distinct across tables."""
+    offsets = np.arange(len(planes), dtype=np.int64) << planes.shape[1]
+    return _buckets(X, planes) + offsets
 
 
 def hyperplane_signatures(
@@ -309,31 +375,20 @@ def hyperplane_signatures(
     kernel next to each bucket row was tried and measured 4x SLOWER
     than the vec_id equi-join it replaced — per-row array conversion
     at the Python->JVM Arrow boundary dwarfs a broadcast hash join.)"""
-    planes = np.random.default_rng(seed).normal(
-        size=(num_tables, num_planes, dim)
-    )
     spark = embeddings.sparkSession
-    bc = spark.sparkContext.broadcast(planes)
+    bc = spark.sparkContext.broadcast(
+        _planes(seed, num_tables, num_planes, dim))
 
     def sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         H = bc.value
-        t_n, p_n, _ = H.shape
-        pows = (1 << np.arange(p_n)).astype(np.int64)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].to_numpy()
-            out_ids, out_tab, out_bkt = [], [], []
-            for t in range(t_n):
-                bits = (M @ H[t].T) > 0
-                out_ids.append(ids)
-                out_tab.append(np.full(len(ids), t, dtype=np.int64))
-                out_bkt.append(bits @ pows)
+            b = _buckets(_matrix(pdf[vec_col]), H)
             yield pd.DataFrame({
-                "vec_id": np.concatenate(out_ids),
-                "table": np.concatenate(out_tab),
-                "bucket": np.concatenate(out_bkt),
+                "vec_id": np.repeat(pdf[id_col].to_numpy(), len(H)),
+                "table": np.tile(np.arange(len(H), dtype=np.int64), len(b)),
+                "bucket": b.ravel(),
             })
 
     return embeddings.select(id_col, vec_col).mapInPandas(
@@ -352,117 +407,6 @@ def auto_num_planes(n_corpus: int, target_occupancy: int = 25) -> int:
 
     raw = math.ceil(math.log2(max(n_corpus, 2) / float(target_occupancy)))
     return int(min(max(raw, 4), 30))
-
-
-def _seq_dot(A: np.ndarray, B: np.ndarray,
-             ai: np.ndarray | None = None,
-             bi: np.ndarray | None = None) -> np.ndarray:
-    """Row-wise dot via a strict left-to-right column accumulation —
-    bitwise identical to the Catalyst
-    ``aggregate(zip_with(a, b, *), 0.0, acc + v)`` fold that the
-    distributed scorer evaluates (0.0 + x0 == x0 exactly), unlike
-    pairwise-summing np.sum.  Optional ``ai``/``bi`` row gathers are
-    applied PER COLUMN so the working set stays (n,)-sized: a
-    (n, dim) gather + cumsum allocated ~100 MB of fresh pages per
-    call, which in the long-lived driver process measured 20-30x the
-    standalone cost (allocator/page-fault churn, CPU time == wall)."""
-    a0 = A[ai, 0] if ai is not None else A[:, 0]
-    b0 = B[bi, 0] if bi is not None else B[:, 0]
-    acc = a0 * b0
-    for j in range(1, A.shape[1]):
-        aj = A[ai, j] if ai is not None else A[:, j]
-        bj = B[bi, j] if bi is not None else B[:, j]
-        acc += aj * bj
-    return acc
-
-
-def _lsh_topk_incore(emb_pdf, q_pdf, dim, k, num_planes, seed,
-                     num_tables, multiprobe) -> "pd.DataFrame":
-    """Driver-side LSH top-k over collected sides — identical draws,
-    buckets, probes, candidate set, sims (sequential-fold arithmetic)
-    and (sim desc, vec_id asc) ranking as the distributed plan."""
-    cid = emb_pdf["vec_id"].to_numpy(np.int64)
-    C = np.vstack(emb_pdf["cv"].to_numpy()).astype(np.float64)
-    qid = q_pdf["query_id"].to_numpy(np.int64)
-    Q = np.vstack(q_pdf["qv"].to_numpy()).astype(np.float64)
-    H = np.random.default_rng(seed).normal(
-        size=(num_tables, num_planes, dim)
-    )
-    pows = (1 << np.arange(num_planes)).astype(np.int64)
-    pairs = []
-    for t in range(num_tables):
-        cb = ((C @ H[t].T) > 0) @ pows
-        qb = ((Q @ H[t].T) > 0) @ pows
-        probes = [qb]
-        if multiprobe:
-            probes += [qb ^ (1 << j) for j in range(num_planes)]
-        order = np.argsort(cb, kind="stable")
-        sb = cb[order]
-        for pb in probes:
-            lo = np.searchsorted(sb, pb)
-            hi = np.searchsorted(sb, pb, side="right")
-            cnt = hi - lo
-            tot = int(cnt.sum())
-            if tot == 0:
-                continue
-            qrow = np.repeat(np.arange(len(qid)), cnt)
-            within = np.arange(tot) - np.repeat(np.cumsum(cnt) - cnt,
-                                               cnt)
-            crow = order[lo[qrow] + within]
-            pairs.append(np.stack([qrow, crow], axis=1))
-    if not pairs:
-        return pd.DataFrame(
-            {"query_id": [], "vec_id": [], "rank": [], "sim": []}
-        )
-    P = np.unique(np.concatenate(pairs), axis=0)
-    keep = qid[P[:, 0]] != cid[P[:, 1]]
-    P = P[keep]
-    if len(P) == 0:
-        return pd.DataFrame(
-            {"query_id": [], "vec_id": [], "rank": [], "sim": []}
-        )
-    qn = np.sqrt(_seq_dot(Q, Q))
-    cn = np.sqrt(_seq_dot(C, C))
-    sim = _seq_dot(Q, C, P[:, 0], P[:, 1]) / (qn[P[:, 0]] * cn[P[:, 1]])
-    qv_ids = qid[P[:, 0]]
-    cv_ids = cid[P[:, 1]]
-    order = np.lexsort((cv_ids, -sim, qv_ids))
-    qs = qv_ids[order]
-    starts = np.nonzero(np.r_[True, qs[1:] != qs[:-1]])[0]
-    seg_len = np.diff(np.r_[starts, len(qs)])
-    rank = np.arange(len(qs)) - np.repeat(starts, seg_len) + 1
-    sel = order[rank <= k]
-    return pd.DataFrame({
-        "query_id": qv_ids[sel], "vec_id": cv_ids[sel],
-        "rank": rank[rank <= k].astype(np.int32),
-        "sim": sim[sel],
-    })
-
-
-def _collect_sides(embeddings, queries, id_col, vec_col, query_id_col):
-    """(corpus (vec_id, cv), queries (query_id, qv)) as driver frames
-    when each side fits ``gate.ANN_INCORE_ROWS``, else None.  Both
-    sides are counted before either is collected, so a side over the
-    gate costs count jobs only."""
-    limit = gate.ANN_INCORE_ROWS
-    if limit <= 0:
-        return None
-    ne = embeddings.count()
-    if ne > limit:
-        return None
-    nq = queries.count()
-    if nq > limit:
-        return None
-    return (
-        gate.collect_within(
-            embeddings.select(F.col(id_col).alias("vec_id"),
-                              F.col(vec_col).alias("cv")),
-            limit, size=ne),
-        gate.collect_within(
-            queries.select(F.col(query_id_col).alias("query_id"),
-                           F.col(vec_col).alias("qv")),
-            limit, size=nq),
-    )
 
 
 def lsh_topk(
@@ -486,100 +430,46 @@ def lsh_topk(
     ``multiprobe=1`` additionally probes every Hamming-distance-1
     bucket of each query signature (flip one plane's sign bit): a
     near-neighbor lost to one marginal hyperplane is recovered without
-    growing the corpus index at all — only the tiny broadcast query
-    side fans out (x ``1 + num_planes`` probe rows per table).  This
-    is the standard multi-probe LSH trade (Lv et al., VLDB 2007):
-    candidate volume grows ~(1 + planes * p_neighbor_flip) while
-    recall compounds across probes AND tables.  ``multiprobe=0``
-    restores exact-bucket probing.
+    growing the corpus index at all — only the broadcast query side
+    fans out (x ``1 + num_planes`` probe keys per table).  This is the
+    standard multi-probe LSH trade (Lv et al., VLDB 2007): candidate
+    volume grows ~(1 + planes * p_neighbor_flip) while recall compounds
+    across probes AND tables.  ``multiprobe=0`` restores exact-bucket
+    probing.
 
     ``num_planes=None`` (default) sizes the signature from the corpus
     count via :func:`auto_num_planes` (~25 vectors/bucket) — the
     setting the measured recall table in BASELINE.md shows ≥ 0.9
     recall@10 on clustered corpora without hand-tuning.
+
+    The query probes are computed once on the driver; each corpus
+    block buckets its own rows inside :func:`_candidate_topk`, so no
+    corpus signature table, join or cross-table dedup exchange exists.
     """
     if multiprobe not in (0, 1):
         raise ValueError("multiprobe must be 0 or 1 (Hamming probe radius)")
-    sides = _collect_sides(embeddings, queries, id_col, vec_col,
-                           query_id_col)
-    if sides is not None:
-        # in-core fast path (round 6): both sides collected, identical
-        # draws/buckets/probes/candidate set, sims via the sequential
-        # fold, same ranking — two counts + two collects instead of
-        # ~6 jobs of Python-stage and broadcast latency.
-        emb_pdf, q_pdf = sides
-        spark = embeddings.sparkSession
-        if len(emb_pdf) == 0 or len(q_pdf) == 0:
-            return spark.createDataFrame([], _TOPK_SCHEMA)
-        np_planes = (num_planes if num_planes is not None
-                     else auto_num_planes(
-                         n_corpus if n_corpus is not None
-                         else len(emb_pdf)))
-        out = _lsh_topk_incore(
-            emb_pdf, q_pdf, dim, k, np_planes, seed,
-            num_tables, multiprobe,
-        )
-        return spark.createDataFrame(out, _TOPK_SCHEMA)
+    spark = embeddings.sparkSession
+    qids, Q = _query_arrays(_queries(queries, query_id_col,
+                                     vec_col).toPandas())
+    if len(qids) == 0:
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    corpus = _corpus(embeddings, id_col, vec_col)
+    cpdf = gate.collect_within(corpus, gate.ANN_INCORE_ROWS)
     if num_planes is None:
         # auto-sizing needs the corpus count; callers that know it pass
         # n_corpus and skip the count job (ADVICE r5)
         num_planes = auto_num_planes(
-            n_corpus if n_corpus is not None else embeddings.count()
+            n_corpus if n_corpus is not None
+            else len(cpdf) if cpdf is not None else embeddings.count()
         )
-    query_sig = hyperplane_signatures(
-        queries.select(F.col(query_id_col).alias("vec_id"),
-                       F.col(vec_col)),
-        dim, num_planes, seed, "vec_id", vec_col, num_tables,
-    ).withColumnRenamed("vec_id", "query_id")
-    if multiprobe:
-        probes = F.array(
-            F.col("bucket"),
-            *[F.col("bucket").bitwiseXOR(F.lit(1 << j))
-              for j in range(num_planes)],
-        )
-        query_sig = query_sig.select(
-            "query_id", "table", F.explode(probes).alias("bucket")
-        )
-    corpus_sig = hyperplane_signatures(
-        embeddings, dim, num_planes, seed, id_col, vec_col, num_tables
-    )
-    # candidate generation and the cross-table dedup run on ID PAIRS
-    # only; the embedding arrays attach AFTERWARDS, so the dedup and
-    # ranking exchanges carry 16-byte rows instead of ~1 KB rows with
-    # both vectors (guide §2.3: shuffle keys, not payloads).  Norms
-    # are evaluated once per source vector; sim is bit-identical to
-    # the former per-candidate folds (same fold, same operands, same
-    # qn*cn order).
-    cand = (
-        F.broadcast(query_sig).join(corpus_sig, ["table", "bucket"])
-        .where(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", "vec_id")
-        .dropDuplicates(["query_id", "vec_id"])  # union across tables
-    )
-    qmap = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
-    )
-    cmap = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    scored = (
-        cand.join(F.broadcast(qmap), "query_id")
-        .join(cmap, "vec_id")
-        .select(
-            "query_id", "vec_id",
-            (_dot(F.col("qv"), F.col("cv"))
-             / (F.col("qn") * F.col("cn"))).alias("sim"),
-        )
-    )
-    win = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "sim")
-    )
+    planes = _planes(seed, num_tables, num_planes, dim)
+    flips = np.array([0] + ([1 << j for j in range(num_planes)]
+                            if multiprobe else []), dtype=np.int64)
+    qkeys = _lsh_keys(Q, planes)
+    probes = (qkeys[:, :, None] ^ flips).reshape(len(qids), -1)
+    kernel = partial(_candidate_topk, keys=partial(_lsh_keys, planes=planes),
+                     k=k)
+    return _gated_topk(corpus, cpdf, kernel, (qids, _unit(Q), probes), k)
 
 
 def recall_at_k(
@@ -626,11 +516,14 @@ def embedding_near_dup_pairs(
 
     mode="lsh" (the scale path): candidates are pairs sharing a
     (table, bucket) in OR-amplified hyperplane LSH; only candidates pay
-    the exact cosine.  True near-duplicates (cosine ~ 1) collide in a
-    given table with probability (1 - theta/pi)^p ~ (1 - eps)^p, so a
-    handful of tables gives near-perfect recall at high thresholds.
+    the exact cosine, scored by :func:`_pair_dot` on :func:`_unit` rows
+    in a ``mapInPandas`` — the arithmetic of :func:`near_dup_groups`'
+    in-core verify, so both sides of its gate take the same threshold
+    decisions.  True near-duplicates (cosine ~ 1) collide in a given
+    table with probability (1 - theta/pi)^p ~ (1 - eps)^p, so a handful
+    of tables gives near-perfect recall at high thresholds.
     mode="exact": all-pairs — O(n^2), for validation and small inputs
-    only.
+    only; sims are the Catalyst fold the DuckDB oracle compares.
     """
     e = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col))
     if mode == "exact":
@@ -664,13 +557,19 @@ def embedding_near_dup_pairs(
         .select("vec_a", "vec_b", "va", "vb")
         .dropDuplicates(["vec_a", "vec_b"])
     )
-    sim_expr = (_dot(F.col("va"), F.col("vb"))
-                / (_norm(F.col("va")) * _norm(F.col("vb"))))
-    return (
-        cand.withColumn("sim", sim_expr)
-        .where(F.col("sim") >= threshold)
-        .select("vec_a", "vec_b", "sim")
-    )
+
+    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            sim = _pair_dot(_unit(_matrix(pdf["va"])),
+                            _unit(_matrix(pdf["vb"])))
+            keep = sim >= threshold
+            yield pd.DataFrame({"vec_a": pdf["vec_a"].to_numpy()[keep],
+                                "vec_b": pdf["vec_b"].to_numpy()[keep],
+                                "sim": sim[keep]})
+
+    return cand.mapInPandas(verify, "vec_a long, vec_b long, sim double")
 
 
 def kmeans_fit(
@@ -703,23 +602,20 @@ def kmeans_fit(
     if len(sample) < k:
         sample += embeddings.select(F.col(vec_col)).limit(
             k - len(sample)).collect()
-    C = np.array([np.asarray(r[0], dtype=np.float64) for r in sample[:k]])
-    C /= np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+    C = _unit(np.array([np.asarray(r[0], dtype=np.float64)
+                        for r in sample[:k]]))
     dim = C.shape[1]
 
     prepared = embeddings.select(F.col(vec_col).alias("_v"))
     for _ in range(max_iters):
         bc = spark.sparkContext.broadcast(C)
 
-        def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def partial_sums(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             C_ = bc.value
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                X = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-                X /= np.maximum(
-                    np.linalg.norm(X, axis=1, keepdims=True), 1e-12
-                )
+                X = _unit(_matrix(pdf["_v"]))
                 a = np.argmax(X @ C_.T, axis=1)
                 sums = np.zeros_like(C_)
                 np.add.at(sums, a, X)
@@ -732,7 +628,7 @@ def kmeans_fit(
                 })
 
         partials = prepared.mapInPandas(
-            partial, schema="c long, s array<double>, n double"
+            partial_sums, schema="c long, s array<double>, n double"
         )
         if dim <= 256:
             reduced = partials.groupBy("c").agg(
@@ -771,50 +667,16 @@ def kmeans_fit(
     return C
 
 
-def _ivf_topk_incore(emb_pdf, q_pdf, Cn, k, nprobe) -> "pd.DataFrame":
-    """Driver-side IVF top-k — identical assignment/probe/sim/rank
-    arithmetic as the distributed plan (see ivf_topk)."""
-    cid = emb_pdf["vec_id"].to_numpy(np.int64)
-    C = np.vstack(emb_pdf["cv"].to_numpy()).astype(np.float64)
-    Xn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-    lists = np.argmax(Xn @ Cn.T, axis=1)
-    qid = q_pdf["query_id"].to_numpy(np.int64)
-    Q = np.vstack(q_pdf["qv"].to_numpy()).astype(np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    probes = np.argsort(-(Qn @ Cn.T), axis=1)[:, :nprobe]
-    order = np.argsort(lists, kind="stable")
-    sl = lists[order]
-    lo = np.searchsorted(sl, probes.ravel())
-    hi = np.searchsorted(sl, probes.ravel(), side="right")
-    cnt = hi - lo
-    tot = int(cnt.sum())
-    if tot == 0:
-        return pd.DataFrame(
-            {"query_id": [], "vec_id": [], "rank": [], "sim": []}
-        )
-    qrow = np.repeat(np.repeat(np.arange(len(qid)), probes.shape[1]), cnt)
-    within = np.arange(tot) - np.repeat(np.cumsum(cnt) - cnt, cnt)
-    crow = order[lo[np.repeat(np.arange(len(cnt)), cnt)] + within]
-    keep = qid[qrow] != cid[crow]
-    qrow, crow = qrow[keep], crow[keep]
-    if len(qrow) == 0:
-        return pd.DataFrame(
-            {"query_id": [], "vec_id": [], "rank": [], "sim": []}
-        )
-    qn = np.sqrt(_seq_dot(Q, Q))
-    cn = np.sqrt(_seq_dot(C, C))
-    sim = _seq_dot(Q, C, qrow, crow) / (qn[qrow] * cn[crow])
-    so = np.lexsort((cid[crow], -sim, qid[qrow]))
-    qs = qid[qrow][so]
-    starts = np.nonzero(np.r_[True, qs[1:] != qs[:-1]])[0]
-    seg_len = np.diff(np.r_[starts, len(qs)])
-    rank = np.arange(len(qs)) - np.repeat(starts, seg_len) + 1
-    sel = so[rank <= k]
-    return pd.DataFrame({
-        "query_id": qid[qrow][sel], "vec_id": cid[crow][sel],
-        "rank": rank[rank <= k].astype(np.int32),
-        "sim": sim[sel],
-    })
+def _ivf_lists(X: np.ndarray, centers: np.ndarray) -> np.ndarray:
+    """(rows, 1) inverted-list id of each raw row: its nearest unit
+    centroid."""
+    return np.argmax(_unit(X) @ centers.T, axis=1)[:, None]
+
+
+def _ivf_probes(X: np.ndarray, centers: np.ndarray,
+                nprobe: int) -> np.ndarray:
+    """(rows, nprobe) ids of each raw row's ``nprobe`` nearest lists."""
+    return np.argsort(-(_unit(X) @ centers.T), axis=1)[:, :nprobe]
 
 
 def ivf_topk(
@@ -832,126 +694,76 @@ def ivf_topk(
     """(query_id, vec_id, rank, sim): IVF approximate top-k — the
     second ANN scale path next to :func:`lsh_topk`.
 
-    The corpus is assigned once to its nearest k-means centroid (the
-    inverted lists); each query probes its ``nprobe`` closest
+    Each corpus vector belongs to the inverted list of its nearest
+    k-means centroid; each query probes its ``nprobe`` closest
     centroids and scores ONLY those lists' members.
 
-    mode="broadcast": probe rows (q * nprobe, with full query vectors)
-    broadcast-join the corpus on list id — lowest latency, bounded by
-    the broadcast size at millions of queries.
+    mode="broadcast": the query side is collected, its probes computed
+    once and broadcast; each corpus block assigns its own rows to lists
+    inside :func:`_candidate_topk` (on the driver below
+    ``gate.ANN_INCORE_ROWS``, else in one ``mapInPandas``) — lowest
+    latency, bounded by the broadcast size at millions of queries.
     mode="cogroup": the large-q posture — probes stay distributed and
     each inverted list cogroups with its probing queries (one BLAS per
     list, local top-(k+1), final per-query window merge), exactly
     :func:`cosine_topk_distributed`'s shape keyed by list id instead
     of a hash bucket.  No collect or broadcast of either side.
-    mode="auto" (default) picks cogroup once q * nprobe exceeds
-    ``broadcast_max_probe_rows``.
+    mode="auto" (default) collects the queries when q * nprobe is at
+    most ``broadcast_max_probe_rows`` and takes the cogroup otherwise.
 
     Expected candidate volume ~ n * nprobe / k_lists per query either
-    way; skewed lists (dense regions) are handled by AQE skew-join
-    like any other hot key.
+    way; in the cogroup, skewed lists (dense regions) are handled by
+    AQE like any other hot key.
     """
     if mode not in ("auto", "broadcast", "cogroup"):
         raise ValueError(f"unknown ivf_topk mode {mode!r}")
     spark = embeddings.sparkSession
-    Cn = centers / np.maximum(
-        np.linalg.norm(centers, axis=1, keepdims=True), 1e-12
-    )
-    sides = (_collect_sides(embeddings, queries, id_col, vec_col,
-                            query_id_col)
-             if mode in ("auto", "broadcast") else None)
-    if sides is not None:
-        # in-core fast path (round 6): same centroid assignment
-        # (argmax of the identical normalized matmul), same probe
-        # selection, sims via the sequential fold, same ranking — two
-        # counts + two collects instead of two Python stages, the
-        # auto-mode count job, a join and a window.
-        emb_pdf, q_pdf = sides
-        if len(emb_pdf) == 0 or len(q_pdf) == 0:
+    Cn = _unit(centers)
+    corpus = _corpus(embeddings, id_col, vec_col)
+    qside = _queries(queries, query_id_col, vec_col)
+    qpdf = None
+    if mode == "broadcast":
+        qpdf = qside.toPandas()
+    elif mode == "auto":
+        qpdf = gate.collect_within(qside, broadcast_max_probe_rows // nprobe)
+    if qpdf is not None:
+        qids, Q = _query_arrays(qpdf)
+        if len(qids) == 0:
             return spark.createDataFrame([], _TOPK_SCHEMA)
-        out = _ivf_topk_incore(emb_pdf, q_pdf, Cn, k, nprobe)
-        return spark.createDataFrame(out, _TOPK_SCHEMA)
-    bc = spark.sparkContext.broadcast(Cn)
+        cpdf = gate.collect_within(corpus, gate.ANN_INCORE_ROWS)
+        kernel = partial(_candidate_topk,
+                         keys=partial(_ivf_lists, centers=Cn), k=k)
+        return _gated_topk(corpus, cpdf, kernel,
+                           (qids, _unit(Q), _ivf_probes(Q, Cn, nprobe)), k)
 
-    def assign_corpus(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        C_ = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True),
-                                1e-12)
-            yield pd.DataFrame({
-                "vec_id": pdf["_id"].to_numpy(),
-                "list_id": np.argmax(Xn @ C_.T, axis=1),
-                "cv": pdf["_v"].to_numpy(),
-            })
+    def assign(lists, vec: str):
+        """mapInPandas adding ``list_id``: one row per list ``lists(X)``
+        gives each input row."""
 
-    def assign_queries(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        C_ = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True),
-                                1e-12)
-            probes = np.argsort(-(Xn @ C_.T), axis=1)[:, :nprobe]
-            ids = pdf["_id"].to_numpy()
-            yield pd.DataFrame({
-                "query_id": np.repeat(ids, probes.shape[1]),
-                "list_id": probes.ravel(),
-                "qv": np.repeat(pdf["_v"].to_numpy(), probes.shape[1]),
-            })
+        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                ids = lists(_matrix(pdf[vec]))
+                m = ids.shape[1]
+                yield pd.DataFrame({
+                    c: np.repeat(pdf[c].to_numpy(), m) for c in pdf.columns
+                }).assign(list_id=ids.ravel())
+
+        return run
 
     vec_t = "array<double>"
-    corpus = embeddings.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-    ).mapInPandas(
-        assign_corpus, schema=f"vec_id long, list_id long, cv {vec_t}"
+    lists = corpus.mapInPandas(
+        assign(partial(_ivf_lists, centers=Cn), "cv"),
+        schema=f"vec_id long, cv {vec_t}, list_id long",
     )
-    qprobes = queries.select(
-        F.col(query_id_col).alias("_id"), F.col(vec_col).alias("_v")
-    ).mapInPandas(
-        assign_queries, schema=f"query_id long, list_id long, qv {vec_t}"
+    probes = qside.mapInPandas(
+        assign(partial(_ivf_probes, centers=Cn, nprobe=nprobe), "qv"),
+        schema=f"query_id long, qv {vec_t}, list_id long",
     )
-    if mode == "auto":
-        q_count = queries.count()
-        mode = ("broadcast"
-                if q_count * nprobe <= broadcast_max_probe_rows
-                else "cogroup")
-    if mode == "broadcast":
-        # per-source-row norms (same Catalyst fold, evaluated once per
-        # corpus/probe row instead of once per candidate; sim values
-        # bit-identical)
-        scored = (
-            F.broadcast(qprobes.withColumn("qn", _norm(F.col("qv"))))
-            .join(corpus.withColumn("cn", _norm(F.col("cv"))), "list_id")
-            .where(F.col("query_id") != F.col("vec_id"))
-            .select(
-                "query_id", "vec_id",
-                (_dot(F.col("qv"), F.col("cv"))
-                 / (F.col("qn") * F.col("cn"))).alias("sim"),
-            )
-            .dropDuplicates(["query_id", "vec_id"])
-        )
-    else:
-        # each corpus vector lives in exactly one list, so (query, vec)
-        # pairs are unique across the nprobe lists — no dedup needed
-        scored = (
-            corpus.groupBy("list_id")
-            .cogroup(qprobes.groupBy("list_id"))
-            .applyInPandas(
-                _blas_topk_scorer(k + 1),
-                schema="query_id long, vec_id long, sim double",
-            )
-            .where(F.col("query_id") != F.col("vec_id"))
-        )
-    win = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "sim")
-    )
+    # each corpus vector lives in exactly one list, so (query, vec)
+    # pairs are unique across the nprobe lists — no dedup needed
+    return _cogroup_topk(lists, probes, "list_id", k)
 
 
 def near_dup_groups(
@@ -1053,17 +865,12 @@ def near_dup_groups(
             vec_pdf = e.join(F.broadcast(cid_df), "vec_id",
                              "left_semi").toPandas()
             vid = vec_pdf["vec_id"].to_numpy(np.int64)
-            V = np.vstack(vec_pdf[vec_col].to_numpy()).astype(np.float64)
-            V /= np.maximum(
-                np.linalg.norm(V, axis=1, keepdims=True), 1e-300
-            )
+            V = _unit(_matrix(vec_pdf[vec_col]))
             order = np.argsort(vid)
             vid, V = vid[order], V[order]
-            ai = np.searchsorted(vid, ua)
-            bi = np.searchsorted(vid, va)
-            # per-column accumulation: (n,)-sized temporaries (see
-            # _seq_dot — large per-call gathers churn the allocator)
-            sims = _seq_dot(V, V, ai, bi)
+            # the distributed verify's arithmetic (embedding_near_dup_pairs)
+            sims = _pair_dot(V, V, np.searchsorted(vid, ua),
+                             np.searchsorted(vid, va))
             keep = sims >= threshold
             if not keep.any():
                 return ids.select(

@@ -74,13 +74,16 @@ def exact_dedup_groups(docs: DataFrame, text_col: str = "text",
 
 
 def shingles_col(text: Column, n: int = 3) -> Column:
-    """Distinct n-gram (word-shingle) strings."""
+    """Distinct n-gram (word-shingle) strings; empty for a text of
+    fewer than ``n`` tokens (there ``sequence`` would count down to a
+    ``slice`` start of 0, which raises)."""
     toks = tokens_col(text)
     grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(0))),
+        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
         lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
     )
-    return F.array_distinct(grams)
+    return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(
+        F.array().cast("array<string>"))
 
 
 def minhash_signatures(
@@ -170,8 +173,11 @@ def ngram_jaccard_pairs(
     b = sets.select(F.col("doc_id").alias("doc_b"),
                     F.col("shs").alias("shb"))
     inter = F.size(F.array_intersect("sha", "shb"))
+    # pairs sharing no shingle are dropped, as in the oracle's shingle
+    # join; this also skips the 0/0 of two docs shorter than shingle_n
     return (
         pairs.join(a, "doc_a").join(b, "doc_b")
+        .where(inter > 0)
         .select(
             "doc_a", "doc_b",
             (inter / (F.size("sha") + F.size("shb") - inter))

@@ -459,7 +459,11 @@ def _knn_rounds_multi(
         edge_cols = [
             F.col("id").alias("focal"),
             F.col("neighbor"),
-            (F.lit(1.0) if binary else (F.lit(1.0) / F.sqrt("d2")))
+            # inverse distance; a coincident neighbour gets inf, as in
+            # the in-core kernel (numpy 1 / 0), not an ANSI error
+            (F.lit(1.0) if binary
+             else F.when(F.col("d2") == 0, F.lit(float("inf")))
+             .otherwise(F.lit(1.0) / F.sqrt("d2")))
             .alias("weight"),
         ]
         if keep_d2:

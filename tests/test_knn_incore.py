@@ -53,6 +53,24 @@ def test_incore_knn_nonbinary_weights(spark):
         assert w == pytest.approx(1.0 / d, rel=1e-12)
 
 
+def test_knn_nonbinary_coincident_points(spark, monkeypatch):
+    """binary=False with coincident neighbours (d2 == 0, distinct ids):
+    weight inf on both sides of the gate, as 1 / 0 in numpy and
+    distance_band_edges' pow(0, -1); every other weight is 1 / d."""
+    xy, pts = _skewed_points(spark, n_hot=80, n_sparse=60)
+    fast = {(r.focal, r.neighbor): r.weight
+            for r in W.knn_edges(pts, k=4, binary=False).collect()}
+    monkeypatch.setattr(gate, "KNN_INCORE_TARGETS", 0)
+    dist = {(r.focal, r.neighbor): r.weight
+            for r in W.knn_edges(pts, k=4, binary=False).collect()}
+    assert fast == dist
+    d = {e: np.sqrt(((xy[e[0]] - xy[e[1]]) ** 2).sum()) for e in fast}
+    assert any(v == 0.0 for v in d.values())
+    for e, w in fast.items():
+        assert w == (np.inf if d[e] == 0.0 else pytest.approx(1.0 / d[e],
+                                                               rel=1e-12))
+
+
 def test_incore_vs_distributed_knn_join(spark, monkeypatch):
     from esda_spark.operators.spatial_join import knn_join
 
@@ -180,6 +198,47 @@ def test_near_dup_groups_above_a_nonzero_gate(spark, monkeypatch):
     assert sum(1 for _, g, c in fast if c == 0) == 30
 
 
+def test_near_dup_verify_threshold_at_a_pair_sim(spark, monkeypatch):
+    """Both sides of the near-dup gate verify with one kernel (unit rows,
+    column-ordered dot): a threshold equal to a planted pair's kernel
+    sim keeps that pair on both sides, and zero vectors (cosine 0) are
+    singletons instead of an error."""
+    import esda_spark.operators.similarity as S
+
+    rng = np.random.default_rng(21)
+    base = rng.normal(size=(30, 16))
+    vecs = np.vstack([base, base + 0.001 * rng.normal(size=(30, 16)),
+                      np.zeros((2, 16))])
+    emb = spark.createDataFrame(
+        [(int(i), [float(v) for v in row]) for i, row in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+
+    def kernel_sim(i, j):
+        return S._pair_dot(S._unit(vecs[[i]]), S._unit(vecs[[j]]))[0]
+
+    def fold_sim(i, j):
+        # a left fold over the raw vectors divided by the norms: the
+        # arithmetic a Catalyst aggregate(zip_with) verify would use
+        dot = lambda a, b: sum((x * y for x, y in zip(a, b)), 0.0)
+        a, b = vecs[i], vecs[j]
+        return dot(a, b) / (np.sqrt(dot(a, a)) * np.sqrt(dot(b, b)))
+
+    # prefer a pair the fold arithmetic would place below the threshold
+    i = next((i for i in range(30) if fold_sim(i, 30 + i)
+              < kernel_sim(i, 30 + i)), 0)
+    kw = dict(threshold=kernel_sim(i, 30 + i), mode="lsh", num_planes=4,
+              num_tables=4)
+    fast = {r.vec_id: r.group_id
+            for r in S.near_dup_groups(emb, **kw).collect()}
+    monkeypatch.setattr(gate, "DEDUP_INCORE_PAIRS", 0)
+    dist = {r.vec_id: r.group_id
+            for r in S.near_dup_groups(emb, **kw).collect()}
+    assert fast == dist
+    assert fast[30 + i] == fast[i] == i
+    assert fast[60] == 60 and fast[61] == 61
+
+
 def _emb_fixture(spark, n=400, dim=16, seed=4):
     rng = np.random.default_rng(seed)
     V = rng.normal(size=(n, dim))
@@ -194,53 +253,124 @@ def _q_of(emb, nq=10):
         F.col("vec_id").alias("query_id"), "embedding")
 
 
-def test_lsh_topk_incore_vs_distributed(spark, monkeypatch):
+# the fixture's corpus rows: the gate at n - 1 takes the distributed
+# path, at n and n + 1 the driver path
+_N = 400
+
+
+def _gate_pair(monkeypatch, rows, run):
+    """(result with ANN_INCORE_ROWS = rows, result on the other side of
+    the gate: distributed when ``rows`` admits the corpus, else the
+    default driver path)."""
+    monkeypatch.setattr(gate, "ANN_INCORE_ROWS", rows)
+    at_gate = run()
+    monkeypatch.setattr(gate, "ANN_INCORE_ROWS",
+                        0 if rows >= _N else 10 * _N)
+    return at_gate, run()
+
+
+@pytest.mark.parametrize("rows", [_N - 1, _N, _N + 1])
+def test_lsh_topk_incore_vs_distributed(spark, monkeypatch, rows):
     import esda_spark.operators.similarity as S
 
-    emb = _emb_fixture(spark)
+    emb = _emb_fixture(spark, n=_N)
     q = _q_of(emb)
-    fast = {(r.query_id, r.vec_id, r.rank, r.sim)
-            for r in S.lsh_topk(emb, q, dim=16, k=5, num_planes=5,
-                                num_tables=4).collect()}
-    monkeypatch.setattr(gate, "ANN_INCORE_ROWS", 0)
-    dist = {(r.query_id, r.vec_id, r.rank, r.sim)
-            for r in S.lsh_topk(emb, q, dim=16, k=5, num_planes=5,
-                                num_tables=4).collect()}
-    # bitwise parity incl. sims: the in-core scorer reproduces the
-    # Catalyst sequential fold exactly (cumsum)
-    assert fast == dist
+    at_gate, across = _gate_pair(monkeypatch, rows, lambda: {
+        (r.query_id, r.vec_id, r.rank, r.sim)
+        for r in S.lsh_topk(emb, q, dim=16, k=5, num_planes=5,
+                            num_tables=4).collect()})
+    # bitwise parity incl. sims: one kernel on both sides
+    assert at_gate == across
+    assert len(at_gate) == 50
 
 
-def test_cosine_topk_incore_vs_distributed(spark, monkeypatch):
+@pytest.mark.parametrize("rows", [_N - 1, _N, _N + 1])
+def test_cosine_topk_incore_vs_distributed(spark, monkeypatch, rows):
     import esda_spark.operators.similarity as S
 
-    emb = _emb_fixture(spark, seed=6)
+    emb = _emb_fixture(spark, n=_N, seed=6)
     q = _q_of(emb)
-    fast = {(r.query_id, r.vec_id, r.rank)
-            for r in S.cosine_topk(emb, q, k=5).collect()}
-    monkeypatch.setattr(gate, "ANN_INCORE_ROWS", 0)
-    dist = {(r.query_id, r.vec_id, r.rank)
-            for r in S.cosine_topk(emb, q, k=5).collect()}
+    at_gate, across = _gate_pair(monkeypatch, rows, lambda: {
+        (r.query_id, r.vec_id, r.rank)
+        for r in S.cosine_topk(emb, q, k=5).collect()})
     # rank-level parity: both paths score with BLAS, whose LSBs are
     # shape-dependent — the operator's contract (and the ann_topk
     # oracle) is the id/rank projection
-    assert fast == dist
+    assert at_gate == across
+    assert len(at_gate) == 50
 
 
-def test_ivf_topk_incore_vs_distributed(spark, monkeypatch):
+@pytest.mark.parametrize("rows", [_N - 1, _N, _N + 1])
+def test_ivf_topk_incore_vs_distributed(spark, monkeypatch, rows):
     import esda_spark.operators.similarity as S
 
-    emb = _emb_fixture(spark, seed=8)
+    emb = _emb_fixture(spark, n=_N, seed=8)
     q = _q_of(emb)
     centers = S.kmeans_fit(emb, k=8, max_iters=4, seed=3)
-    fast = {(r.query_id, r.vec_id, r.rank, r.sim)
-            for r in S.ivf_topk(emb, q, centers, k=5,
-                                nprobe=2).collect()}
+    at_gate, across = _gate_pair(monkeypatch, rows, lambda: {
+        (r.query_id, r.vec_id, r.rank, r.sim)
+        for r in S.ivf_topk(emb, q, centers, k=5, nprobe=2).collect()})
+    assert at_gate == across
+    assert len(at_gate) == 50
+
+
+def test_ann_topk_above_gate_plan_is_one_map_in_pandas(spark, monkeypatch):
+    """Above the gate, lsh_topk and ivf_topk(mode="broadcast") stream
+    the corpus through one mapInPandas with the queries broadcast: no
+    corpus signature table, no join, no dedup exchange."""
+    import esda_spark.operators.similarity as S
+
+    emb = _emb_fixture(spark, n=60)
+    q = _q_of(emb)
+    centers = np.random.default_rng(2).normal(size=(4, 16))
     monkeypatch.setattr(gate, "ANN_INCORE_ROWS", 0)
-    dist = {(r.query_id, r.vec_id, r.rank, r.sim)
-            for r in S.ivf_topk(emb, q, centers, k=5,
-                                nprobe=2).collect()}
-    assert fast == dist
+    for out in (S.lsh_topk(emb, q, dim=16, k=5, num_planes=4),
+                S.ivf_topk(emb, q, centers, k=5, nprobe=2,
+                           mode="broadcast")):
+        assert out.count() == 50
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") == 1, plan
+        assert "Join" not in plan and "CartesianProduct" not in plan, plan
+
+
+def test_ann_topk_zero_norm_rows(spark, monkeypatch):
+    """A zero query row and a zero corpus row: cosine 0 against
+    everything, the same rows on both sides of the gate, no error."""
+    import esda_spark.operators.similarity as S
+
+    rng = np.random.default_rng(12)
+    V = rng.normal(size=(60, 8))
+    V[0] = 0.0   # a query (ids < 10 query) and a corpus row
+    V[30] = 0.0  # a corpus row only
+    emb = spark.createDataFrame(
+        [(int(i), [float(v) for v in row]) for i, row in enumerate(V)],
+        "vec_id long, embedding array<double>",
+    )
+    q = _q_of(emb)
+    centers = rng.normal(size=(4, 8))
+    ops = {
+        "cosine": lambda: S.cosine_topk(emb, q, k=3),
+        "lsh": lambda: S.lsh_topk(emb, q, dim=8, k=3, num_planes=4),
+        "ivf": lambda: S.ivf_topk(emb, q, centers, k=3, nprobe=2),
+    }
+    for name, op in ops.items():
+        fast = sorted(tuple(r) for r in op().collect())
+        monkeypatch.setattr(gate, "ANN_INCORE_ROWS", 0)
+        dist = sorted(tuple(r) for r in op().collect())
+        monkeypatch.undo()
+        if name == "cosine":
+            # id/rank contract; BLAS sims may differ in the last bits
+            assert [r[:3] for r in fast] == [r[:3] for r in dist], name
+            assert np.allclose([r[3] for r in fast], [r[3] for r in dist],
+                               rtol=1e-12, atol=0), name
+        else:
+            assert fast == dist, name
+        zero_q = [r for r in fast if r[0] == 0]
+        assert zero_q and all(r[3] == 0.0 for r in zero_q), name
+        assert all(r[3] == 0.0 for r in fast if r[1] in (0, 30)), name
+    # the exact operator ranks a zero query's ties by vec_id
+    assert [r[1] for r in sorted(tuple(r) for r in ops["cosine"]().collect())
+            if r[0] == 0] == [1, 2, 3]
 
 
 @pytest.mark.parametrize("side", ["corpus", "queries"])

@@ -584,13 +584,21 @@ def test_topk_duplicate_vector_ties(spark):
         [(int(i), [float(v) for v in vecs[i]]) for i in range(len(vecs))],
         "vec_id long, embedding array<double>",
     )
-    q = emb.where(F.col("vec_id").isin([0, 40, 157])).select(
+    qids = [0, 40, 157]
+    q = emb.where(F.col("vec_id").isin(qids)).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    want = {(r.query_id, r.rank): r.vec_id
-            for r in cosine_topk(emb, q, k=10, arrow=False).collect()}
-    got_arrow = {(r.query_id, r.rank): r.vec_id
-                 for r in cosine_topk(emb, q, k=10).collect()}
-    assert got_arrow == want
+    # numpy brute force: one sim per distinct-vector pair, so the ties
+    # are exact; rank by (sim desc, vec_id asc), self-match dropped
+    unit = base / np.linalg.norm(base, axis=1, keepdims=True)
+    want = {}
+    for qi in qids:
+        sims = (unit @ unit[qi // 40])[np.arange(len(vecs)) // 40]
+        order = sorted((v for v in range(len(vecs)) if v != qi),
+                       key=lambda v: (-sims[v], v))
+        want.update({(qi, r + 1): v for r, v in enumerate(order[:10])})
+    got = {(r.query_id, r.rank): r.vec_id
+           for r in cosine_topk(emb, q, k=10).collect()}
+    assert got == want
     for nb in (1, 3, 7):
         got = {(r.query_id, r.rank): r.vec_id
                for r in cosine_topk_distributed(emb, q, k=10, n_buckets=nb)

@@ -70,6 +70,23 @@ def test_lsh_and_jaccard(spark):
         assert 0.5 < jmap[(0, 2)] < 1.0
 
 
+def test_ngram_jaccard_drops_pairs_sharing_no_shingle(spark):
+    """Candidate pairs with no shared shingle get no row (the oracle's
+    shingle join has none), including two docs shorter than the shingle
+    width, whose empty sets would otherwise divide 0 by 0."""
+    base = " ".join(f"w{i}" for i in range(12))
+    df = spark.createDataFrame([
+        (0, base), (1, base.replace("w11", "x")),       # share shingles
+        (2, "a b c d e f"), (3, "g h i j k l"),         # share none
+        (4, "tiny"), (5, "two words"),                  # < 3 tokens
+    ], "doc_id long, text string")
+    pairs = spark.createDataFrame([(0, 1), (2, 3), (4, 5)],
+                                  "doc_a long, doc_b long")
+    got = {(r.doc_a, r.doc_b): r.jaccard
+           for r in tx.ngram_jaccard_pairs(df, pairs).collect()}
+    assert got == {(0, 1): pytest.approx(9 / 11)}
+
+
 def test_minhash_dedup_groups(spark):
     base = "word%d " * 40
     rows = [
